@@ -1,70 +1,22 @@
 #!/usr/bin/env python
-"""Benchmark headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE compact JSON line: {"metric": "headline_queries_total",
-"value": total_sec, "unit": "sec", "queries": {slowest-10 only}, "sf":
-..., "n_run": ..., "n_fail": ..., "rotating_total": ...} and writes the
-FULL per-query map to BENCH_DETAIL.json next to this file. Two records
-died before this split (round 7: the one-line JSON with 143 timings
-outgrew the driver's 2000-char capture; round 8: 207 fresh-JVM
-subprocesses outran the driver's wall clock, rc 124), so the driver-
-facing line is now bounded in BOTH dimensions:
+    python bench.py                 # every headline query, one JVM each
+    python bench.py --one NAME      # one query in this process
 
-* BOUNDED LIST — ``HEADLINE_BENCH`` is a FIXED ~60-entry set (the
-  SURVEY §2 anchors, every family's heaviest measured op, and every
-  query that ever benched >1 s at sf0.1) that runs every round and is
-  the round-over-round comparator; ``ROTATING_BENCH`` cycles ≤25 of
-  the remaining catalog entries per round (hand-rotated each round,
-  exactly like ``_DRIVER_WINDOW`` rotates correctness slots), so the
-  long tail still gets periodic driver-recorded numbers without
-  unbounded wall clock. ``SPARK_GRAFT_BENCH_FULL=1`` sweeps the whole
-  catalog locally (fresh-JVM); ``SPARK_GRAFT_BENCH_SHARED=1`` sweeps
-  the whole catalog in ONE shared session and writes
-  BENCH_SHARED.json — a cheaper timing tier for the long tail
-  (numbers carry the documented neighbor noise and are labelled
-  "shared-session" in VALIDATION.json; driver slots stay reserved
-  for the fresh-JVM headline set).
-* BOUNDED LINE — the printed line carries the totals plus only the 10
-  slowest headline timings (always < 2000 chars); BENCH_DETAIL.json
-  holds every per-query number for humans and the judge.
-* BOUNDED WALL (round 13 — VERDICT_r12 item 1; the r12 driver run hit
-  rc 124 with ZERO captured output after the min-of-two-JVM insurance
-  stacked on a heavy 53-slot rotation): three defenses, so a timeout
-  can never again lose everything:
-  - GLOBAL BUDGET — ``SPARK_GRAFT_BENCH_BUDGET_SEC`` (default 2400 s):
-    before each subprocess launch, if elapsed + a p95 estimate of one
-    more launch would exceed the budget, the remaining names are
-    SKIPPED (recorded in BENCH_DETAIL.json "skipped"), never started.
-    2400 s is derived from committed evidence, not hope: a fresh-JVM
-    launch measures ~28-30 s wall at sf0.1 on this hardware class
-    (r13 local run: 59 headline launches in ~29 min), so r11's
-    COMPLETED 112-launch driver sweep implies the driver wall clock
-    exceeds ~55 min; 40 min of launches therefore always finishes,
-    covers the 59-entry headline comparator in full, and leaves
-    ~10 min for divergence reruns and rotating slots.
-  - INCREMENTAL EMISSION — BENCH_DETAIL.json is atomically rewritten
-    after EVERY query, and a SIGTERM/SIGINT handler prints the
-    driver-facing one-line JSON with whatever completed (marked
-    "partial": true) before exiting — a partial record beats rc 124
-    with nothing.
-  - SPEND ORDER — headline first (the comparator), then min-of-two-JVM
-    reruns for sub-2 s entries ONLY from leftover budget AND only when
-    the fresh sample diverges >25% from the query's committed ledger
-    record (the rerun is cold-JVM-artifact insurance, not a default —
-    r12's unconditional 41 reruns are most of what blew the wall;
-    both raw samples persisted in BENCH_DETAIL.json "samples" so
-    min-of-two rounds stay comparable to single-sample rounds —
-    ADVICE r12), rotating slots last.
+The headline set is ``HEADLINE_BENCH`` plus ``SPECIAL_BUILDERS`` (the
+production scale paths that the catalog's oracle-parity twins do not
+exercise). Each query runs in its OWN
+subprocess — a fresh JVM, code cache and heap — because a shared session
+showed +15-89% drift on queries whose code had not changed (GC and
+codegen-cache pressure from neighbours), even with per-query
+``System.gc()`` and an untimed warm-up. A subprocess that outlives 180 s
+is killed with its whole process group and counted as failed.
 
-Methodology (VERDICT_r4 "What's wrong"): each query runs in its OWN
-subprocess — a fresh JVM, fresh code cache, fresh heap — because the
-round-4 shared-session run showed +15-89% drift on queries whose code
-had not changed (GC/codegen-cache pressure from neighbors), even with
-per-query System.gc() and an untimed warmup. Within each subprocess the
-query still runs warmup + min-of-2 (whole-stage codegen compiles and C2
-JIT warms on run 1; steady state is the honest cluster number). Set
-SPARK_GRAFT_BENCH_INPROC=1 to fall back to the fast shared-session mode
-for local iteration (numbers then carry the documented neighbor noise).
+``bench.py`` writes the per-query map to ``BENCH_DETAIL.json`` next to
+this file (rewritten after every query) and prints one JSON line:
+``{"metric": "headline_queries_total", "value": <sum of seconds>,
+"unit": "sec", "sf": ..., "n_run": ..., "n_fail": ...}``.
 
 Each query is materialized with the no-op sink (full execution, no
 driver collect). Scale-sensitive picks: the similarity headliners are
@@ -91,403 +43,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Every catalog query benchable as-is (the full local-sweep list and the
-# source pool for ROTATING_BENCH). The driver run does NOT iterate this —
-# see HEADLINE_BENCH / ROTATING_BENCH below.
-CATALOG_BENCH = [
-    "flagship_top_reported",
-    "s4_json_serialize",
-    "f4_equality_lookup",
-    "j5_fanout_join",
-    "olap_q1_pricing_summary",
-    "star_upsert_fact",
-    "a2_unique_key_dedup",
-    "j4_nullsafe_fk_join",
-    "f1_f2_ts_bounds",
-    "text_stats",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "curation_chunk_overlap",
-    "text_gopher_quality",
-    "drift_ks_2sample",
-    "olap_q6_forecast_revenue",
-    "join_interval_overlap",
-    "graph_triangle_count",
-    "dedup_containment_pairs",
-    "topk_heavy_tokens",
-    "text_bm25_topk",
-    "text_boilerplate_removal",
-    "text_intradoc_dedup",
-    "dedup_exact_substring",
-    "text_bigram_lm_score",
-    # round-5 additions
-    "dedup_semantic_semdedup",
-    "sim_ivfpq_topk",
-    "multimodal_png_pixel_stats",
-    "dedup_substring_trim",
-    "text_bpe_train_merges",
-    "multimodal_jpeg_pixel_stats",
-    # round-6 additions
-    "mv_incremental_update",
-    "graph_common_neighbors",
-    "ts_cusum_changepoint",
-    "text_perplexity_buckets",
-    "curation_epoch_shuffle",
-    "graph_adamic_adar",
-    "olap_pareto_frontier",
-    # late round-6 batch (VERDICT_r6 "What's wrong" #1: bench what you
-    # ship — the 14 ops added after the r6 bench run)
-    "join_salted_skew",
-    "stats_exact_median_twopass",
-    "stats_mad_robust",
-    "multimodal_image_ahash",
-    "dedup_fuzzy_clusters",
-    "curation_span_corruption",
-    "text_rake_keywords",
-    "text_zipf_fit",
-    "agg_countmin_sketch",
-    "audit_bloom_membership",
-    "audit_table_checksum",
-    "audit_snapshot_diff",
-    "stats_ab_test_proportions",
-    "ts_burst_episodes",
-    # round-7 additions
-    "audit_media_quarantine_rate",
-    "multimodal_jpeg420_pixel_stats",
-    "agg_kmv_set_ops",
-    "join_bloom_prefilter",
-    "stats_welch_ttest",
-    "ts_exp_smoothing",
-    "text_hashed_linear_score",
-    "multimodal_gif_pixel_stats",
-    "stats_poisson_bootstrap_ci",
-    "agg_hdr_quantile_sketch",
-    "sim_mmr_rerank",
-    "text_textrank_keywords",
-    "olap_basket_lift",
-    "ts_holt_trend",
-    "audit_data_contract",
-    "emb_matryoshka_recall",
-    "sim_label_ndcg",
-    "ts_theil_sen_trend",
-    "graph_bfs_khop",
-    "graph_label_propagation",
-    "stats_mann_whitney_u",
-    "dedup_url_canonicalize",
-    "stats_ols_daily_trend",
-    "audit_freshness_slo",
-    "text_kl_source_divergence",
-    "olap_attribution_last_touch",
-    "emb_random_projection",
-    "multimodal_bmp_pixel_stats",
-    "multimodal_wav_rms_windows",
-    "ts_backtest_naive_models",
-    "graph_degree_assortativity",
-    "ts_sax_quartile_symbols",
-    "stats_quantile_normalize",
-    "emb_nearest_centroid_accuracy",
-    "curation_shard_manifest",
-    "stats_spearman_corr",
-    "audit_column_profile",
-    "s3_json_malformed_rate",
-    "join_ip_prefix_lpm",
-    "stats_cramers_v",
-    "stats_kendall_tau_daily",
-    "curation_temperature_weights",
-    "multimodal_wav_silence_runs",
-    "ts_autocorr_multi_lag",
-    "audit_pk_fk_orphans",
-    "graph_clustering_global",
-    "multimodal_image_dhash",
-    "stats_anova_oneway",
-    "emb_knn_label_accuracy",
-    "olap_abc_classification",
-    "s4_fixed_width_roundtrip",
-    "ts_weighted_moving_avg",
-    "olap_new_vs_returning",
-    "curation_class_balance_downsample",
-    "olap_lorenz_deciles",
-    "stats_wilson_ci",
-    "graph_preferential_attachment",
-    "emb_dim_collapse_audit",
-    "stats_runs_test",
-    "stats_histogram2d_dow_value",
-    "emb_pair_distance_histogram",
-    "text_bigram_entropy_rate",
-    "olap_seasonality_index",
-    "stats_iqr_outlier_census",
-    "audit_langid_confusion",
-    "olap_reactivated_users",
-    "graph_hits_scores",
-    "olap_survival_kaplan_meier",
-    "stats_kruskal_wallis",
-    "emb_binary_hamming_topk",
-    "text_pmi_cooccurrence",
-    "ts_bollinger_bands",
-    "ts_dtw_pairs",
-    "stats_jarque_bera",
-    "graph_butterfly_support",
-    "stats_permutation_test",
-    "emb_knn_outlier_census",
-    "ts_peak_detection",
-    "stats_levene_brownforsythe",
-    "olap_wow_growth_decomposition",
-    "multimodal_image_entropy",
-    "graph_closeness_topk",
-    "stats_trimmed_mean",
-    "join_scd2_pointintime",
-    "ts_binary_segmentation",
-    "text_burrows_delta",
-    "emb_hard_negative_mining",
-    "stats_ks_uniformity",
-    "ts_seasonal_strength",
-    "stats_mde_power",
-    "curation_coreset_kcenter",
-    "ts_overdispersion_index",
-    "text_word_burstiness",
-    "stats_cohens_d",
-    "stats_grubbs_max",
-    "text_hapax_ratio",
-    "ts_lead_lag_xcorr",
-    "ts_hurst_rs",
-    "olap_median_order_gap",
-    "graph_k_truss",
-    "graph_rich_club",
-    "emb_centroid_shift_drift",
-    "sim_range_search_radius",
-    "emb_triplet_violation_rate",
-    "emb_silhouette_sample",
-    "multimodal_wav_clipping_rate",
-    "multimodal_image_colorfulness",
-    "curation_stratified_quota",
-    "text_js_divergence_sources",
-    "graph_modularity_labelprop",
-    "graph_local_bridges",
-    "stats_friedman_test",
-    "join_nearest_event",
-    "stats_capture_recapture",
-    "olap_brand_weekend_lift",
-    "stats_cohens_kappa",
-    "text_simpson_diversity",
-    "stats_hill_tail_estimator",
-    "olap_ship_delay_by_priority",
-    "stats_odds_ratio_ci",
-    "dedup_yield_curve",
-    "emb_norm_profile",
-    "curation_dup_rate_by_source",
-    "ts_missing_data_audit",
-    "agg_linear_counting",
-    "stats_sprt_ab_monitor",
-    "curation_mixing_anneal",
-    "olap_customer_hhi",
-    "olap_return_rate_by_brand",
-    "text_log_odds_terms",
-    "stats_negbin_fit",
-    "emb_intrinsic_dim_twonn",
-    "stats_markov_transitions",
-    "graph_degree_ccdf",
-    "curation_pii_scrub_census",
-    "curation_funnel_report",
-    "olap_order_linecount_profile",
-    "ts_diff_in_diff",
-    "text_oov_rate",
-    "stats_mcnemar_test",
-    "olap_cohort_ltv_curve",
-    "graph_ego_density_top",
-    "dedup_shingle_df_profile",
-    "stats_gumbel_block_maxima",
-    "stats_theil_index",
-    "ts_haar_energy",
-    "emb_davies_bouldin_sq",
-    "stats_record_days",
-    "olap_price_qty_elasticity",
-    "s4_csv_roundtrip",
-    "stats_ljung_box",
-    "emb_hubness_audit",
-    "olap_time_to_first_purchase",
-    "stats_birthday_collision_check",
-    "stats_mann_kendall",
-    "graph_degree_h_index",
-    "multimodal_wav_dc_offset",
-    # round-9 additions
-    "stats_bh_fdr",
-    "stats_wilcoxon_signed_rank",
-    "stats_page_hinkley",
-    "olap_rfm_segmentation",
-    "olap_retention_triangle",
-    "audit_psi_drift",
-    "text_flesch_reading_ease",
-    "text_yule_k",
-    "text_mattr_sliding",
-    "graph_degree_gini",
-    "graph_harmonic_2hop",
-    "graph_avg_neighbor_degree",
-    "ts_goertzel_weekly_power",
-    "ts_spc_western_electric",
-    "stats_tost_equivalence",
-    "emb_same_label_auc",
-    "emb_nn_margin_audit",
-    "emb_cosine_anisotropy_hist",
-    "join_asof_tolerance",
-    "olap_session_conversion_by_depth",
-    "stats_cvm_test",
-    "stats_dunn_index",
-    "text_topk_coverage_curve",
-    "text_heaps_bigram_fit",
-    "multimodal_png_quadrant_stats",
-    "ts_rolling_distinct_users",
-    "olap_open_order_aging",
-    "stats_chatterjee_xi",
-    "audit_join_fanout_forecast",
-    "ts_max_drawdown",
-    "curation_pack_straddle_audit",
-    "olap_price_volume_bridge",
-    "dedup_prefix_clusters",
-    "stats_kendall_w",
-    "graph_fof_recommendations",
-    "olap_xyz_classification",
-    "multimodal_wav_goertzel_bins",
-    "curation_dedup_quality_confusion",
-    "graph_triangle_participation",
-    "s3_csv_malformed_rate",
-    "stats_eb_shrinkage",
-    "olap_dau_wau_stickiness",
-    "curation_soft_dedup_weights",
-    "olap_part_adoption_curve",
-    "audit_sequence_inversions",
-    "stats_hodges_lehmann",
-    "graph_edge_embeddedness",
-    "ts_turning_points_test",
-    "graph_brand_assortativity",
-    "emb_centroid_mrr",
-    "stats_matthews_corr",
-    "ts_rolling_median_band",
-    "stats_poisson_etest_daily",
-    "audit_partition_checksums",
-    "dedup_threshold_yield_curve",
-    "stats_gamma_fit_moments",
-    "olap_customer_order_regularity",
-    "multimodal_gif_index_histogram",
-    "stats_youden_threshold_sweep",
-    "curation_sample_size_planner",
-    "dedup_winnowing_fingerprints",
-    "olap_mix_residual_heatmap",
-    "stats_gtest_independence",
-    "olap_abc_xyz_matrix",
-    "stats_cooks_distance",
-    "olap_supplier_diversification",
-    "ts_permutation_entropy",
-    "stats_cochran_q",
-    "text_rbo_vocab_overlap",
-    "stats_lin_ccc",
-    "olap_price_decile_migration",
-    "emb_exact_dup_vectors",
-    "stats_sign_test",
-    "olap_aov_quarterly",
-    # round-10 additions
-    "stats_mood_median_test",
-    "stats_cronbach_alpha",
-    "stats_icc_oneway",
-    "stats_holm_bonferroni",
-    "stats_durbin_watson",
-    "stats_bartlett_test",
-    "ts_variance_ratio_test",
-    "ts_sample_entropy",
-    "ts_madogram_fractal",
-    "ts_recurrence_rate",
-    "olap_bcg_matrix",
-    "olap_order_value_log_histogram",
-    "text_richness_panel",
-    "text_char_entropy_by_source",
-    "text_gunning_fog",
-    "graph_path_census",
-    "emb_uniformity_alignment",
-    "emb_centroid_confusion",
-    "dedup_minhash_estimate_audit",
-    "dedup_band_scurve_audit",
-    "audit_timestamp_granularity",
-    "multimodal_wav_peak_bin",
-    "multimodal_wav_spectral_entropy",
-    "olap_order_backlog_timeline",
-    "stats_fleiss_kappa",
-    "stats_tukey_hsd",
-    "stats_log_rank_test",
-    "win_forward_fill_gaps",
-    "win_range_interval_sum",
-    "agg_weighted_percentile",
-    "curation_token_budget_audit",
-    "sim_cosine_threshold_census",
-    "dedup_cross_source_clusters",
-    "stats_two_way_anova",
-    "stats_powerlaw_ks_fit",
-    "audit_monotonic_id_gaps",
-    "olap_rfm_migration",
-    "stats_cuped_variance_reduction",
-    "ts_markov_entropy_rate",
-    "olap_brand_weekly_corr_pairs",
-    "olap_nation_assortment_jaccard",
-    "curation_shard_balance_audit",
-    "ts_burstiness_coefficient",
-    "stats_ratio_metric_delta_ci",
-    "curation_dedup_savings_forecast",
-    "multimodal_image_lr_symmetry",
-    "olap_weekday_hour_heatmap",
-    "audit_order_total_reconciliation",
-    "text_tfidf_source_signatures",
-    "emb_norm_eta_squared",
-    "olap_price_endings_profile",
-    "sessionize_entry_exit_matrix",
-    "olap_discount_response_curve",
-    "audit_value_outlier_days",
-    "emb_centroid_multiclass_mcc",
-    "curation_padding_waste_curve",
-    "audit_exact_duplicate_events",
-    "stats_ols_slope_by_quarter",
-    "olap_user_accumulation_curve",
-    "text_word_length_histogram",
-    "olap_price_index_laspeyres_paasche",
-    "graph_clustering_by_degree",
-    "curation_source_mix_entropy",
-]
-
-# Auto-heal pool drift (round 11): every catalog query is benchable via
-# the generic thunk, so any name registered in plans.QUERIES but absent
-# from the literal list above joins the pool automatically — the list had
-# silently drifted 171 names behind the 518-query catalog by r10. The six
-# catalog names with dedicated special builders stay out: bench_builders()
-# adds them explicitly and _bench_names() promotes every special builder
-# into the FIXED 59-entry headline, so letting them into CATALOG_BENCH
-# would demote them and break the round-over-round comparator.
-_SPECIAL_BUILDER_CATALOG_NAMES = frozenset(
-    {
-        "tfidf_top_terms",
-        "join_asof",
-        "join_bigbig_revenue",
-        "sim_lsh_topk",
-        "sim_ivf_topk",
-        "sim_lsh_near_dup",
-    }
-)
-
-
-def _heal_catalog_bench() -> None:
-    from report_worker_spark.plans import QUERIES
-
-    have = set(CATALOG_BENCH) | _SPECIAL_BUILDER_CATALOG_NAMES
-    CATALOG_BENCH.extend(n for n in QUERIES if n not in have)
-
-
-_heal_catalog_bench()
-
-# ---------------------------------------------------------------------------
-# The driver-run set (VERDICT_r8 item 1). HEADLINE_BENCH is FIXED — the
-# stable round-over-round comparator: SURVEY §2 anchors, the special-
-# builder scale paths below, every family's heaviest measured op, and
-# everything that ever benched >1 s at sf0.1 (r5/r6/r7 records). Do not
-# grow it casually; new queries earn driver numbers through
-# ROTATING_BENCH instead.
-# ---------------------------------------------------------------------------
+# The fixed headline comparator: the SURVEY §2 anchors, every family's
+# heaviest measured op, and every query that ever benched >1 s at sf0.1.
+# SPECIAL_BUILDERS join it automatically.
 HEADLINE_BENCH = [
     # §2 anchors / star pipeline
     "flagship_top_reported",
@@ -499,7 +57,7 @@ HEADLINE_BENCH = [
     "s4_json_serialize",
     "f4_equality_lookup",
     "j5_fanout_join",
-    # dedup family (heaviest per r5-r7 records)
+    # dedup family
     "dedup_exact",
     "dedup_minhash_lsh",
     "dedup_simhash",
@@ -544,41 +102,6 @@ HEADLINE_BENCH = [
     "stats_levene_brownforsythe",
     "curation_coreset_kcenter",
     "curation_epoch_shuffle",
-]
-
-# Round-13 rotating slots (VERDICT_r12 item 1c): capped at 25 — the
-# r12 driver run timed out, so none of r12's 53 picks got a driver
-# number; these are the FIRST 25 of that list, re-queued (the ledger
-# behind "never benched" is VALIDATION.json — last_bench_round ==
-# null; the remainder re-queue next round). Hand-rotated each round,
-# same discipline as plans/_qshared._DRIVER_WINDOW. The long tail gets
-# shared-session timings every round via SPARK_GRAFT_BENCH_SHARED=1.
-ROTATING_BENCH = [
-    "audit_table_checksum",
-    "audit_snapshot_diff",
-    "stats_ab_test_proportions",
-    "ts_burst_episodes",
-    "audit_media_quarantine_rate",
-    "multimodal_jpeg420_pixel_stats",
-    "agg_kmv_set_ops",
-    "join_bloom_prefilter",
-    "stats_welch_ttest",
-    "ts_exp_smoothing",
-    "text_hashed_linear_score",
-    "multimodal_gif_pixel_stats",
-    "stats_poisson_bootstrap_ci",
-    "agg_hdr_quantile_sketch",
-    "sim_mmr_rerank",
-    "text_textrank_keywords",
-    "olap_basket_lift",
-    "ts_holt_trend",
-    "audit_data_contract",
-    "emb_matryoshka_recall",
-    "sim_label_ndcg",
-    "ts_theil_sen_trend",
-    "graph_bfs_khop",
-    "graph_label_propagation",
-    "stats_mann_whitney_u",
 ]
 
 
@@ -676,39 +199,48 @@ def _star_hash(spark: SparkSession) -> DataFrame:
     return deltas["fact"].select("sighting_id", "location_id", "region_id")
 
 
+# The scale paths that are always headline. Three are plain catalog
+# queries; three replace the catalog's parity-sized similarity queries of
+# the same name with their bucketed production settings.
+SPECIAL_BUILDERS: dict[str, Callable[[SparkSession], DataFrame]] = {
+    "dedup_ngram_jaccard_capped": _jaccard_capped,
+    "wire_pipeline_100k_msgs": _wire_100k,
+    "tfidf_top_terms": _catalog_thunk("tfidf_top_terms"),
+    "join_asof": _catalog_thunk("join_asof"),
+    "join_bigbig_revenue": _catalog_thunk("join_bigbig_revenue"),
+    # ANN headliners: the 100 TB paths (bucketed equi-joins)
+    "sim_lsh_topk": _sim("lsh_topk", k=5, n_planes=6, n_tables=6, dim=64),
+    "sim_ivf_topk": _sim("ivf_topk", k=5, n_centroids=64, n_probe=8),
+    "sim_lsh_near_dup": _sim(
+        "lsh_near_dup_pairs", threshold=0.99, n_planes=8, n_tables=12, dim=64
+    ),
+    # exact-at-scale: Q×B cogrouped BLAS tiles, no driver round-trip
+    "sim_topk_matmul_blocked": _sim(
+        "blocked_topk_matmul", k=5, n_blocks=4, n_query_groups=4
+    ),
+    "star_upsert_hash_mode": _star_hash,
+    "graph_pagerank_sum": _pagerank_sum,
+    # graph_ppr_sum is the bench proxy for the catalog's
+    # graph_personalized_pagerank: both run
+    # graph.personalized_pagerank's seeded power-iteration core
+    # (this row in map-combinable SUM mode, the catalog twin in
+    # deterministic fold mode for oracle parity); the catalog
+    # query only adds the top-20 tail, so this row prices it
+    "graph_ppr_sum": _ppr_sum,
+}
+
+
 def bench_builders() -> dict[str, Callable[[SparkSession], DataFrame]]:
-    builders: dict[str, Callable[[SparkSession], DataFrame]] = {
-        name: _catalog_thunk(name) for name in CATALOG_BENCH
-    }
-    builders.update(
-        {
-            "dedup_ngram_jaccard_capped": _jaccard_capped,
-            "wire_pipeline_100k_msgs": _wire_100k,
-            "tfidf_top_terms": _catalog_thunk("tfidf_top_terms"),
-            "join_asof": _catalog_thunk("join_asof"),
-            "join_bigbig_revenue": _catalog_thunk("join_bigbig_revenue"),
-            # ANN headliners: the 100 TB paths (bucketed equi-joins)
-            "sim_lsh_topk": _sim("lsh_topk", k=5, n_planes=6, n_tables=6, dim=64),
-            "sim_ivf_topk": _sim("ivf_topk", k=5, n_centroids=64, n_probe=8),
-            "sim_lsh_near_dup": _sim(
-                "lsh_near_dup_pairs", threshold=0.99, n_planes=8, n_tables=12, dim=64
-            ),
-            # exact-at-scale: Q×B cogrouped BLAS tiles, no driver round-trip
-            "sim_topk_matmul_blocked": _sim(
-                "blocked_topk_matmul", k=5, n_blocks=4, n_query_groups=4
-            ),
-            "star_upsert_hash_mode": _star_hash,
-            "graph_pagerank_sum": _pagerank_sum,
-            # graph_ppr_sum is the bench proxy for the catalog's
-            # graph_personalized_pagerank (VERDICT_r7 item 6): both run
-            # graph.personalized_pagerank's seeded power-iteration core
-            # (this row in map-combinable SUM mode, the catalog twin in
-            # deterministic fold mode for oracle parity); the catalog
-            # query only adds the top-20 tail, so this row prices it
-            "graph_ppr_sum": _ppr_sum,
-        }
-    )
+    """name -> builder for every catalog query, special builders on top."""
+    from report_worker_spark.plans import QUERIES
+
+    builders = {name: _catalog_thunk(name) for name in QUERIES}
+    builders.update(SPECIAL_BUILDERS)
     return builders
+
+
+def headline_names() -> list[str]:
+    return list(dict.fromkeys(HEADLINE_BENCH + list(SPECIAL_BUILDERS)))
 
 
 def materialize(df: DataFrame) -> None:
@@ -722,13 +254,10 @@ def run_one(name: str) -> float:
     and interpreted-bytecode time (measured: join_asof 3.4/1.4/0.93/
     0.97/0.98 s across runs 1-5); steady state — the honest number for
     a long-lived cluster — arrives by run 3. So: up to 7 runs, report
-    the min of runs 3+ (the min over 5 steady samples; two identical
-    5-run benches still disagreed >10% on 17/37 queries, so the extra
-    samples buy the stability the round-over-round comparison needs),
-    with a 25 s cumulative cap so multi-second queries stop at ~3-5
-    runs-worth of evidence instead of padding the wall clock (60 s
-    through round 8; tightened alongside the bounded-list split so the
-    driver sweep stays well inside its wall budget)."""
+    the min of runs 3+ (two identical 5-run benches still disagreed
+    >10% on 17/37 queries, so the extra samples buy stability), with an
+    18 s cap on the post-warm-up runs so multi-second queries stop at
+    ~3-5 runs-worth of evidence, and sub-2 s queries stop at 5 runs."""
     from report_worker_spark.plans.tables import load
     from report_worker_spark.session import get_spark
 
@@ -743,170 +272,68 @@ def run_one(name: str) -> float:
         t0 = time.perf_counter()
         materialize(build(spark))
         times.append(time.perf_counter() - t0)
-        # the cap bounds EVIDENCE time, not warm-up: run 1 pays janino
+        # the cap bounds evidence time, not warm-up: run 1 pays janino
         # compile + interpreted bytecode for the whole plan (measured
-        # 12.6 s vs 2.2 s steady for wire_pipeline_100k_msgs, whose
-        # giant from_json+join codegen warms slowly) — counting it
-        # against the cap used to stop heavy queries at runs 3-4,
-        # BEFORE steady state, making their recorded minimum a
-        # warm-up artifact with a 2x fresh-JVM spread (r14: 3.1-6.2 s
-        # across identical solo runs). 18 s post-warm-up ≈ the old
-        # 25 s including warm-up, so the whole-sweep wall stays
-        # inside the driver budget (the first r14 sweep at 25 s +
-        # excluded run-1 blew it and skipped the rotating tier).
+        # 12.6 s vs 2.2 s steady for wire_pipeline_100k_msgs), and
+        # counting it stopped heavy queries before steady state, with a
+        # 2x fresh-JVM spread (3.1-6.2 s across identical solo runs)
         if i >= 2 and sum(times[1:]) > 18:
             break
-        # VERDICT_r14 item 1: sub-2 s queries stop at 5 runs (warm-up +
-        # 4 evidence runs; the reported min still sees 3 steady
-        # samples, times[2:]). The r14 sweep spent 7 runs on every
-        # fast query and the whole rotating tier was skipped when the
-        # global budget ran out; this cuts ~30% off a fast query's
-        # launch wall without changing the metric (min of runs 3+).
+        # fast queries: warm-up + 4 runs; the min still sees 3 steady
+        # samples (times[2:])
         if i >= 4 and max(times[1:]) < 2.0:
             break
     warm = times[2:] if len(times) > 3 else times[1:]
     return round(min(warm), 3)
 
 
-def _bench_names() -> tuple[list[str], set[str]]:
-    """(names to run, the headline subset). Special builders are always
-    headline — they are the scale paths the comparator was built on."""
-    builders = bench_builders()
-    special = [n for n in builders if n not in CATALOG_BENCH]
-    headline = list(dict.fromkeys(HEADLINE_BENCH + special))
-    if os.environ.get("SPARK_GRAFT_BENCH_FULL"):
-        names = headline + [n for n in builders if n not in headline]
-    else:
-        names = headline + [n for n in ROTATING_BENCH if n not in headline]
-    missing = [n for n in names if n not in builders]
-    assert not missing, f"bench names without builders: {missing}"
-    return names, set(headline)
-
-
-# The currently-running bench child (its own process group), so the
-# SIGTERM handler can kill the whole JVM tree before emitting.
-_ACTIVE_POPEN: subprocess.Popen | None = None
-
-
-def _run_subprocess(name: str, env: dict[str, str]) -> float | None:
+def _run_subprocess(name: str) -> float | None:
     """One fresh-JVM measurement of ``name`` (see run_one for what the
-    subprocess itself measures)."""
-    global _ACTIVE_POPEN
-    try:
-        # start_new_session puts the child in its own process
-        # group so a timeout can killpg the WHOLE tree — the
-        # Spark JVM is a grandchild, and killing only the
-        # direct Python child leaves an orphan JVM stealing
-        # cores from later bench runs (ADVICE r9).
-        with subprocess.Popen(
-            [sys.executable, os.path.abspath(__file__), "--one", name],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-            env=env,
-            start_new_session=True,
-        ) as popen:
-            _ACTIVE_POPEN = popen
+    subprocess itself measures); None if it failed or timed out."""
+    # start_new_session puts the child in its own process group so a
+    # timeout can killpg the WHOLE tree — the Spark JVM is a grandchild,
+    # and killing only the direct Python child leaves an orphan JVM
+    # stealing cores from later bench runs.
+    with subprocess.Popen(
+        [sys.executable, os.path.abspath(__file__), "--one", name],
+        stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE,
+        text=True,
+        start_new_session=True,
+    ) as popen:
+        try:
+            out, err = popen.communicate(timeout=180)
+        except BaseException as exc:  # timeout or interrupt: no orphan JVM
             try:
-                out, err = popen.communicate(timeout=180)
-            except subprocess.TimeoutExpired:
-                try:
-                    os.killpg(popen.pid, signal.SIGKILL)
-                except (ProcessLookupError, PermissionError):
-                    popen.kill()
-                popen.communicate()
-                raise
-            finally:
-                _ACTIVE_POPEN = None
-            proc = subprocess.CompletedProcess(
-                popen.args, popen.returncode, out, err
-            )
-        line = (
-            proc.stdout.strip().splitlines()[-1]
-            if proc.stdout.strip()
-            else ""
-        )
-        return json.loads(line)["sec"]
-    except subprocess.TimeoutExpired:
-        print(f"bench: {name} TIMED OUT at 180 s", file=sys.stderr)
-        return None
-    except (json.JSONDecodeError, KeyError):
+                os.killpg(popen.pid, signal.SIGKILL)
+            except (ProcessLookupError, PermissionError):
+                popen.kill()
+            popen.communicate()
+            if isinstance(exc, subprocess.TimeoutExpired):
+                print(f"bench: {name} TIMED OUT at 180 s", file=sys.stderr)
+                return None
+            raise
+    lines = out.strip().splitlines()
+    try:
+        return json.loads(lines[-1])["sec"]
+    except (IndexError, json.JSONDecodeError, KeyError):
         print(
-            f"bench: {name} FAILED rc={proc.returncode}\n"
-            + proc.stderr[-2000:],
+            f"bench: {name} FAILED rc={popen.returncode}\n" + err[-2000:],
             file=sys.stderr,
         )
         return None
 
 
-class _Budget:
-    """Global wall-clock budget for the subprocess sweep (VERDICT_r12
-    item 1a). ``allows()`` is checked before EVERY launch: elapsed plus
-    a p95 estimate of one more subprocess wall must fit, else the name
-    is skipped (never started — a half-run subprocess is pure waste).
-    The estimate is learned from this run's own completed walls; before
-    3 samples a conservative 60 s floor covers a cold JVM + warmup."""
-
-    FLOOR_SEC = 60.0
-
-    def __init__(self) -> None:
-        self.t0 = time.monotonic()
-        self.total = float(
-            os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "2400")
-        )
-        self.walls: list[float] = []
-
-    def elapsed(self) -> float:
-        return time.monotonic() - self.t0
-
-    def estimate(self) -> float:
-        if len(self.walls) >= 3:
-            ordered = sorted(self.walls)
-            p95 = ordered[min(len(ordered) - 1, int(0.95 * len(ordered)))]
-            return max(p95, 30.0)
-        return self.FLOOR_SEC
-
-    def allows(self) -> bool:
-        return self.elapsed() + self.estimate() <= self.total
-
-    def timed(self, fn, *a):
-        t0 = time.monotonic()
-        out = fn(*a)
-        self.walls.append(time.monotonic() - t0)
-        return out
-
-
-def _detail_payload(
-    timings: dict[str, float | None],
-    headline: set[str],
-    samples: dict[str, list[float]],
-    skipped: list[str],
-    partial: bool,
-) -> dict:
-    head_ok = {
-        k: v for k, v in timings.items() if k in headline and v is not None
-    }
-    rot_ok = {
-        k: v for k, v in timings.items() if k not in headline and v is not None
-    }
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+def _detail_payload(timings: dict[str, float | None]) -> dict:
+    ok = [v for v in timings.values() if v is not None]
     return {
         "metric": "headline_queries_total",
-        "value": round(sum(head_ok.values()), 3),
+        "value": round(sum(ok), 3),
         "unit": "sec",
-        "sf": float(sf),
-        "headline": {k: timings[k] for k in timings if k in headline},
-        "rotating": {k: timings[k] for k in timings if k not in headline},
-        "rotating_total": round(sum(rot_ok.values()), 3),
-        "n_run": len(head_ok) + len(rot_ok),
-        "n_fail": sum(1 for v in timings.values() if v is None),
-        # raw fresh-JVM samples for every min-of-two entry (ADVICE r12:
-        # min-of-two biases fast queries low vs single-sample rounds —
-        # persist both so comparisons can account for the policy)
-        "samples": samples,
-        # names never launched because the global budget ran out
-        "skipped": skipped,
-        "partial": partial,
+        "sf": float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]),
+        "n_run": len(ok),
+        "n_fail": len(timings) - len(ok),
+        "headline": timings,
     }
 
 
@@ -917,315 +344,21 @@ def _atomic_write_json(path: str, payload: dict) -> None:
     os.replace(tmp, path)
 
 
-def _prior_line_names() -> list[str]:
-    """Query names on the latest committed round's driver line
-    (``BENCH_r<N>.json`` → parsed.queries). The PERF comparator diffs
-    the two lines' ``queries`` maps, so a name present last round but
-    absent now reads as "dropped_from_bench" even when the query simply
-    got faster and fell out of the top-10 (VERDICT_r14 item 8: four
-    phantom drops). Entries may be ADDED to the line, never removed —
-    so carry those names forward with their current timings."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best, found = -1, []
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m or int(m.group(1)) <= best:
-            continue
-        try:
-            with open(path) as fh:
-                parsed = json.load(fh).get("parsed") or {}
-            names = list(parsed.get("queries") or {})
-        except (OSError, json.JSONDecodeError, AttributeError):
-            continue
-        if names:
-            best, found = int(m.group(1)), names
-    return found
-
-
-def _driver_line(detail: dict) -> str:
-    head = detail["headline"]
-    ranked = sorted(
-        ((k, v) for k, v in head.items() if v is not None),
-        key=lambda kv: -kv[1],
-    )
-    slowest = dict(ranked[:10])
-    # Carry prior-line names that ran this round but fell out of the
-    # top-10, so the round-over-round comparator never sees a phantom
-    # drop; cap the union at 22 entries (slowest first) to keep the
-    # line well under the driver's 2000-char capture.
-    prior = [n for n in _prior_line_names() if head.get(n) is not None]
-    for name, sec in ranked:
-        if len(slowest) >= 22:
-            break
-        if name in prior:
-            slowest.setdefault(name, sec)
-    churn = sorted(n for n in prior if n not in dict(ranked[:10]))
-    # The driver captures a bounded tail of stdout: keep this line small
-    # (totals + slowest-10 + carried prior names), full per-query map in
-    # BENCH_DETAIL.json.
-    return json.dumps(
-        {
-            "metric": "headline_queries_total",
-            "value": detail["value"],
-            "unit": "sec",
-            "queries": slowest,
-            "sf": detail["sf"],
-            "n_run": detail["n_run"],
-            "n_fail": detail["n_fail"],
-            "rotating_total": detail["rotating_total"],
-            "n_skipped": len(detail["skipped"]),
-            "partial": detail["partial"],
-            # names benched this round that left the top-10 (they got
-            # FASTER, or new entries displaced them) — not drops
-            "top10_churn": churn[:12],
-            "detail": "BENCH_DETAIL.json",
-        }
-    )
-
-
-def _detail_path() -> str:
-    return os.path.join(
+def main() -> None:
+    path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
-
-
-def _detail_path_per_cpu() -> str:
-    """Per-invocation detail twin (VERDICT_r14 item 6/8): the driver
-    runs the sweep at two core counts back-to-back and the second
-    (8-core) run used to overwrite the 32-core detail file. Keep a
-    ``BENCH_DETAIL_c<cpus>.json`` copy per core count so both survive;
-    BENCH_DETAIL.json stays the driver-facing latest (contract)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 0))
-    return os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_DETAIL_c{cpus}.json",
-    )
-
-
-def run_shared_sweep() -> None:
-    """SPARK_GRAFT_BENCH_SHARED=1: time EVERY catalog query in one
-    shared session (warmup discarded, min of 2 timed runs) and write
-    BENCH_SHARED.json. This is the cheap long-tail tier (VERDICT_r12
-    item 6): numbers carry the documented shared-session neighbor
-    noise — they rank queries and catch order-of-magnitude
-    regressions, they are NOT the round-over-round comparator. The
-    file is incremental + atomic so an interrupt keeps what finished."""
-    from report_worker_spark.plans.tables import load
-    from report_worker_spark.session import get_spark
-
-    spark = get_spark("rws-bench-shared")
-    load(spark, SF_DIR, "lineitem").count()
-    builders = bench_builders()
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SHARED.json"
-    )
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    queries: dict[str, float | None] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_SHARED") == "resume":
-        # top-up mode: keep existing timings, run only missing names
-        # (queries added after a sweep started, or failed entries)
-        try:
-            with open(path) as fh:
-                prev = json.load(fh)
-            if prev.get("sf") == float(sf):
-                queries.update(
-                    {
-                        k: v
-                        for k, v in (prev.get("queries") or {}).items()
-                        if v is not None and k in builders
-                    }
-                )
-        except (OSError, json.JSONDecodeError, ValueError):
-            pass
-        builders = {k: v for k, v in builders.items() if k not in queries}
-    for i, (name, build) in enumerate(builders.items()):
-        try:
-            runs = []
-            for _ in range(3):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                materialize(build(spark))
-                runs.append(time.perf_counter() - t0)
-                # never stop before a second run: a >12 s FIRST run is
-                # exactly where the cold codegen-cache penalty is
-                # largest, and recording it would skew the slowest
-                # entries the tier ranks (review finding r13)
-                if len(runs) >= 2 and sum(runs) > 12:
-                    break
-            # drop the first (cold codegen-cache) run when we have spares
-            queries[name] = round(min(runs[1:] if len(runs) > 1 else runs), 3)
-        except Exception as exc:  # noqa: BLE001 — record and continue
-            print(f"shared-bench: {name} FAILED: {exc!r}", file=sys.stderr)
-            queries[name] = None
-        if i % 20 == 19:
-            _atomic_write_json(
-                path, {"mode": "shared-session", "sf": float(sf), "queries": queries}
-            )
-    _atomic_write_json(
-        path, {"mode": "shared-session", "sf": float(sf), "queries": queries}
-    )
-    ok = [v for v in queries.values() if v is not None]
-    print(
-        json.dumps(
-            {
-                "metric": "shared_session_total",
-                "value": round(sum(ok), 3),
-                "unit": "sec",
-                "n_run": len(ok),
-                "n_fail": len(queries) - len(ok),
-                "detail": "BENCH_SHARED.json",
-            }
-        )
-    )
-
-
-def main() -> None:
-    names, headline = _bench_names()
     timings: dict[str, float | None] = {}
-    samples: dict[str, list[float]] = {}
-    skipped: list[str] = []
-
-    if os.environ.get("SPARK_GRAFT_BENCH_INPROC"):
-        for name in names:
-            timings[name] = run_one(name)
-        detail = _detail_payload(timings, headline, samples, skipped, False)
-        _atomic_write_json(_detail_path(), detail)
-        _atomic_write_json(_detail_path_per_cpu(), detail)
-        print(_driver_line(detail), flush=True)
-        return
-
-    def emit(partial: bool) -> dict:
-        detail = _detail_payload(timings, headline, samples, skipped, partial)
-        _atomic_write_json(_detail_path(), detail)
-        _atomic_write_json(_detail_path_per_cpu(), detail)
-        return detail
-
-    def on_signal(signum, frame):  # noqa: ARG001
-        # VERDICT_r12 item 1b: the driver's timeout must never again
-        # capture nothing. Kill the in-flight JVM tree, account every
-        # planned-but-unreached name as skipped (so n_run + n_fail +
-        # n_skipped still covers the full plan — review finding r13),
-        # persist the detail file, print the one-line JSON with what
-        # completed.
-        popen = _ACTIVE_POPEN
-        if popen is not None:
-            try:
-                os.killpg(popen.pid, signal.SIGKILL)
-            except (ProcessLookupError, PermissionError):
-                popen.kill()
-        seen = set(timings) | set(skipped)
-        skipped.extend(n for n in names if n not in seen)
-        print(_driver_line(emit(partial=True)), flush=True)
-        os._exit(0)
-
-    signal.signal(signal.SIGTERM, on_signal)
-    signal.signal(signal.SIGINT, on_signal)
-
-    env = dict(os.environ)
-    prior = _prior_bench_secs()
-    budget = _Budget()
-
-    # Pass 1 — headline with rotating slots INTERLEAVED proportionally
-    # (VERDICT_r14 item 1: the r14 run exhausted the global budget on
-    # the headline pass alone and skipped the entire 25-name rotating
-    # tier, including three of that round's own optimization targets;
-    # interleaving makes budget exhaustion degrade both tiers
-    # proportionally instead of zeroing the tail).
-    head_names = [n for n in names if n in headline]
-    rot_names = [n for n in names if n not in headline]
-    order: list[str] = []
-    ri = 0
-    for i, name in enumerate(head_names, 1):
-        order.append(name)
-        while ri < len(rot_names) and (
-            ri + 1 <= len(rot_names) * i / len(head_names)
-        ):
-            order.append(rot_names[ri])
-            ri += 1
-    order.extend(rot_names[ri:])
-    for name in order:
-        if not budget.allows():
-            skipped.append(name)
-            continue
-        t = budget.timed(_run_subprocess, name, env)
-        timings[name] = t
-        if t is not None and name in headline:
-            samples[name] = [t]
-        emit(partial=True)
-
-    # Pass 2 — min-of-two-JVM reruns for sub-2 s headline entries, only
-    # from leftover budget (cold-JVM insurance; see _RERUN_UNDER_SEC).
-    # The rerun exists to kill cold-JVM ARTIFACTS, so it only fires
-    # when the fresh sample actually DIVERGES from the committed record
-    # (>25% either way, or no record at all) — r12 reran all 41 sub-2 s
-    # entries unconditionally, which is most of what blew the driver
-    # wall; a sample that reproduces its own ledger needs no insurance.
-    for name in head_names:
-        t = timings.get(name)
-        if t is None or name in skipped:
-            continue
-        fast_record = prior.get(name)
-        if min(t, fast_record if fast_record is not None else t) >= (
-            _RERUN_UNDER_SEC
-        ):
-            continue
-        if fast_record is not None and (
-            abs(t - fast_record) <= 0.25 * max(fast_record, 0.05)
-        ):
-            continue
-        if not budget.allows():
-            break
-        t2 = budget.timed(_run_subprocess, name, env)
-        if t2 is not None:
-            samples[name].append(t2)
-            timings[name] = round(min(t, t2), 3)
-        emit(partial=True)
-
-    # (Rotating slots run inside pass 1 — interleaved above.)
-    print(_driver_line(emit(partial=False)), flush=True)
-
-
-# Below this, one fresh-JVM sample is noise-dominated: r11's two
-# apparent headline regressions (j4_nullsafe_fk_join ×2.41,
-# mv_incremental_update ×1.95) were both cold-JVM artifacts that a warm
-# re-measure contradicted (VERDICT_r11 item 2). Headline entries get a
-# SECOND fresh-JVM repetition (min of the two recorded) when EITHER
-# the fresh sample OR the query's last committed bench record
-# (VALIDATION.json) is under the threshold — gating on the fresh
-# sample alone would skip the rerun exactly when a cold artifact
-# pushes a sub-2 s query ABOVE 2 s, the failure mode this exists to
-# suppress. Two whole-JVM samples of a fast query cost ~20 s wall,
-# cheap insurance for the round-over-round comparator; slow queries
-# skip it (JVM-level noise is additive and vanishes against
-# multi-second run times).
-_RERUN_UNDER_SEC = 2.0
-
-
-def _prior_bench_secs() -> dict[str, float]:
-    """name -> last committed bench seconds, from the VALIDATION.json
-    ledger (empty if the ledger is absent — first run in a fresh tree)."""
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "VALIDATION.json"
-    )
-    try:
-        with open(path) as fh:
-            ledger = json.load(fh)
-    except (OSError, json.JSONDecodeError):
-        return {}
-    return {
-        name: row["last_bench_sec"]
-        for name, row in ledger.get("queries", {}).items()
-        if isinstance(row.get("last_bench_sec"), (int, float))
-    }
+    for name in headline_names():
+        timings[name] = _run_subprocess(name)
+        detail = _detail_payload(timings)
+        _atomic_write_json(path, detail)
+    line = {k: v for k, v in detail.items() if k != "headline"}
+    print(json.dumps({**line, "detail": "BENCH_DETAIL.json"}), flush=True)
 
 
 if __name__ == "__main__":
     if len(sys.argv) == 3 and sys.argv[1] == "--one":
         print(json.dumps({"query": sys.argv[2], "sec": run_one(sys.argv[2])}))
-    elif os.environ.get("SPARK_GRAFT_BENCH_SHARED"):
-        run_shared_sweep()
     else:
         main()

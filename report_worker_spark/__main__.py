@@ -56,15 +56,13 @@ def cmd_ingest(args: argparse.Namespace) -> int:
         msgs = ksrc.valid_messages(parsed)
         # persist first-seen reporter/reported names BEFORE resolving, so
         # ids are stable across batches and restarts (reference
-        # get-or-insert semantics, MySQL replaced by the parquet store)
-        v1_names = (
-            msgs.filter(F.col("reporter").isNotNull())
-            .select(sanitize_name("reporter").alias("name"))
-            .unionByName(
-                msgs.filter(F.col("reported").isNotNull())
-                .select(sanitize_name("reported").alias("name"))
-            )
-        )
+        # get-or-insert semantics, MySQL replaced by the parquet store);
+        # one explode emits both names from a single read of msgs
+        v1_names = msgs.select(
+            F.explode(
+                F.array(sanitize_name("reporter"), sanitize_name("reported"))
+            ).alias("name")
+        ).filter(F.col("name").isNotNull())
         store.get_or_insert(v1_names)
         staging = wire_to_staging(msgs, store.read())
         sink(staging, epoch_id)

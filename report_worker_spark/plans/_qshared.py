@@ -782,112 +782,6 @@ def _select_kth(values: DataFrame, col: str, bucket_width: int) -> int | None:
 
 
 
-# ---------------------------------------------------------------------------
-# Driver verification-window rotation.
-#
-# The driver's per-round CORRECTNESS sweep covers the first 50 entries of
-# ``queries()`` in dict-insertion order. Registration order above is
-# thematic (SURVEY §2 sections), so left alone the same ~50 queries would
-# be re-verified every round while the rest of the catalog only ever sees
-# the local pytest mirror (tests/test_oracle_parity.py — same compare, same
-# sf). To convert "locally green" into driver-recorded rows across rounds,
-# we rotate a priority window each round: queries that have never had a
-# driver row go first, plus a few §2 anchors as cross-round canaries.
-# Rounds 1-13 cumulatively covered 490 unique queries, all green on
-# their latest check (VALIDATION.json is the machine-readable ledger:
-# scripts/gen_validation.py derives per-query last-driver-round /
-# last-bench-round from the committed CORRECTNESS/BENCH artifacts).
-# Round 14 promotes the FINAL 40 never-driver-checked queries; the
-# backlog is retired after this window runs.
-# ---------------------------------------------------------------------------
-
-_DRIVER_WINDOW = [
-    # canaries — §2 anchors re-verified every round (14-for-14 target)
-    "j4_nullsafe_fk_join",
-    "star_upsert_fact",
-    "a2_unique_key_dedup",
-    # ------------------------------------------------------------------
-    # round-14 window: the FINAL 40 never-driver-checked queries
-    # (VALIDATION.json last_driver_round == null after r13), in the
-    # same commit order the r13 staging block used. 39 are hash-tier;
-    # emb_zca_mahalanobis is the lone rows-tier residue and takes its
-    # weaker rows-only row now rather than staying parked forever.
-    # After this round the never-driver-checked backlog is zero.
-    "audit_monotonic_id_gaps",
-    "olap_rfm_migration",
-    "stats_cuped_variance_reduction",
-    "ts_markov_entropy_rate",
-    "olap_brand_weekly_corr_pairs",
-    "olap_nation_assortment_jaccard",
-    "curation_shard_balance_audit",
-    "ts_burstiness_coefficient",
-    "stats_ratio_metric_delta_ci",
-    "curation_dedup_savings_forecast",
-    "multimodal_image_lr_symmetry",
-    "olap_weekday_hour_heatmap",
-    "audit_order_total_reconciliation",
-    "text_tfidf_source_signatures",
-    "emb_norm_eta_squared",
-    "olap_price_endings_profile",
-    "sessionize_entry_exit_matrix",
-    "olap_discount_response_curve",
-    "audit_value_outlier_days",
-    "emb_centroid_multiclass_mcc",
-    "curation_padding_waste_curve",
-    "audit_exact_duplicate_events",
-    "stats_ols_slope_by_quarter",
-    "olap_user_accumulation_curve",
-    "text_word_length_histogram",
-    "olap_price_index_laspeyres_paasche",
-    "graph_clustering_by_degree",
-    "curation_source_mix_entropy",
-    "stats_cochran_armitage",
-    "emb_pair_distance_by_label",
-    "multimodal_frame_extract",
-    "multimodal_frame_sampling_census",
-    "olap_herfindahl_nation_revenue",
-    "emb_diag_mahalanobis_census",
-    "text_nb_lang_classifier",
-    "stats_jackknife_ratio_se",
-    "text_nb_per_class_f1",
-    "text_nb_margin_reliability",
-    "agg_approx_distinct_error_bound",
-    "emb_zca_mahalanobis",
-    # ------------------------------------------------------------------
-    # re-checks: queries whose BODIES changed since their last driver
-    # row — the de-quadratic sign-LSH ts_topk_similar_users, the
-    # deletion-neighborhood join_fuzzy_levenshtein, the de-shuffled
-    # v1 resolve pipeline, the streaming near-dedup batch twin,
-    # audit_sequence_inversions (canary for the fixture-helper
-    # extraction; its siblings ts_spc_western_electric /
-    # sim_cosine_near_dup stay pytest-mirrored this round), the
-    # real-codec rewrite of multimodal_features, and the new MJPEG
-    # demux+decode query.
-    "ts_topk_similar_users",
-    "join_fuzzy_levenshtein",
-    "wire_pipeline_staging",
-    "dedup_stream_band_majority",
-    "audit_sequence_inversions",
-    "multimodal_features",
-    "multimodal_mjpeg_frame_decode",
-]
-
-
-
-
-def _rotate_window(priority: list[str]) -> None:
-    """Reorder QUERIES in place (preserves dict identity for importers)."""
-    missing = [n for n in priority if n not in QUERIES]
-    assert not missing, f"window names not in catalog: {missing}"
-    head = [(n, QUERIES[n]) for n in priority]
-    pset = set(priority)
-    tail = [(n, fn) for n, fn in QUERIES.items() if n not in pset]
-    QUERIES.clear()
-    QUERIES.update(head + tail)
-
-
-
-
 _COMPONENTS_CTE = """
     toks AS (
       SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents

@@ -32,7 +32,3 @@ from .q_curation import *  # noqa: F401,F403
 from .q_stats import *  # noqa: F401,F403
 from .q_graph import *  # noqa: F401,F403
 from .q_audit import *  # noqa: F401,F403
-
-
-
-_rotate_window(_DRIVER_WINDOW)

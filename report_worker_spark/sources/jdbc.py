@@ -534,6 +534,14 @@ class JdbcStarSink:
         return [id_col] if self.key_mode == "hash" else natural_keys
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
+        # the batch feeds four delta scans; release it with the epoch
+        batch.cache()
+        try:
+            self._upsert(batch, epoch_id)
+        finally:
+            batch.unpersist()
+
+    def _upsert(self, batch: DataFrame, epoch_id: int) -> None:
         from .. import star
         from ..schemas import GEAR_KEYS, LOCATION_KEYS, SIGHTING_KEYS
 

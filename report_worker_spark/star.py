@@ -138,11 +138,12 @@ def upsert_star(
     naming). Returns the four deltas to append: sighting / gear /
     location dims and the FK-resolved fact. ``existing`` maps dim name →
     current dim contents for the NOT-EXISTS guard (omit for bootstrap).
+    ``batch`` feeds four scans; a caller that writes the deltas should
+    cache it for their lifetime and unpersist it afterwards (the
+    streaming sinks do, per epoch).
 
     Reference: src/app/controllers/report.py:84-311.
     """
-    batch = batch.cache()  # feeds 4 scans, like the MEMORY temp table
-
     # full per-batch dims: the fact must resolve against ALL the batch's
     # keys (hash ids are deterministic, so they agree with any existing
     # copies of the same natural key)

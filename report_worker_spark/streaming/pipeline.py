@@ -152,6 +152,10 @@ class StarUpsertSink:
     stats: list[dict] = field(default_factory=list)
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
+        # the batch feeds four delta scans, like the reference's MEMORY
+        # temp table; release it with the epoch so a stream never holds
+        # more than one cached batch
+        batch.cache()
         try:
             existing = None
             if self.current is not None:
@@ -175,6 +179,8 @@ class StarUpsertSink:
                 raise
             self.dlq(batch, epoch_id, exc)
             self.stats.append({"epoch": epoch_id, "status": "dlq"})
+        finally:
+            batch.unpersist()
 
 
 def run_stream_to_star(

@@ -75,13 +75,5 @@ def rewrite(check_only: bool = False) -> bool:
 
 if __name__ == "__main__":
     in_sync = rewrite(check_only="--check" in sys.argv)
-    # VALIDATION.json (the per-query validation ledger) regenerates
-    # alongside the counts — same derive-don't-type rule. The explicit
-    # path insert keeps the import working under `python -m` / CI
-    # wrappers, not just direct script invocation.
-    sys.path.insert(0, str(Path(__file__).resolve().parent))
-    import gen_validation
-
-    ledger_in_sync = gen_validation.rewrite(check_only="--check" in sys.argv)
-    if "--check" in sys.argv and not (in_sync and ledger_in_sync):
+    if "--check" in sys.argv and not in_sync:
         raise SystemExit("doc counts drifted — run scripts/gen_counts.py")

@@ -248,6 +248,10 @@ def test_star_sink_incremental_batches(spark, derby_url):
     both = _staging(spark, n=600, seed=23)  # same generator: superset of a
     sink(a, 0)
     sink(both, 1)
+    # each epoch's batch is released with the epoch
+    from pyspark import StorageLevel
+
+    assert a.storageLevel == both.storageLevel == StorageLevel.NONE
     n_a, n_both = sink.stats[0]["inserted"], sink.stats[1]["inserted"]
     assert n_both["report"] > 0  # the 200 extra reports' new PKs only
     # total equals one clean load of `both` into a fresh star

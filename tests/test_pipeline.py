@@ -151,6 +151,27 @@ def test_sink_dlq_on_failure(spark, players):
     assert sink.stats[-1]["status"] == "dlq"
 
 
+def test_sink_releases_each_epoch_batch(spark, players, tmp_path):
+    """A stream must not hold one cached batch per epoch: the sink
+    caches its input for the four delta scans and unpersists it when
+    the epoch ends."""
+    from pyspark import StorageLevel
+
+    from report_worker_spark.streaming.pipeline import (
+        epoch_partitioned_writer,
+    )
+
+    sink = StarUpsertSink(writer=epoch_partitioned_writer(str(tmp_path / "star")))
+    batches = []
+    for epoch in range(3):
+        msgs = generate_reports(spark, n=200, seed=20 + epoch)
+        batch = wire_to_staging(msgs, players)
+        sink(batch, epoch_id=epoch)
+        batches.append(batch)
+    assert [s["status"] for s in sink.stats] == ["ok"] * 3
+    assert [b.storageLevel for b in batches] == [StorageLevel.NONE] * 3
+
+
 def test_epoch_writer_replay_idempotent(spark, players, tmp_path):
     """A re-run of the same epoch (foreachBatch replay after crash)
     must replace, not duplicate, that epoch's output."""

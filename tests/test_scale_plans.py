@@ -412,7 +412,6 @@ def test_star_upsert_hot_reported_id_aqe_skew_split(spark):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
-        batch.unpersist()  # upsert_star caches its input
 
     # correctness: fact PK dedup == distinct over the underlying
     # natural keys (sighting_id/location_id are pure hash functions of
