@@ -195,7 +195,7 @@ def _star_hash(spark: SparkSession) -> DataFrame:
     for slot in EQUIPMENT_SLOTS:
         if slot not in staging.columns:
             staging = staging.withColumn(slot, F.lit(None).cast("int"))
-    deltas = star.upsert_star(staging, key_mode="hash")
+    deltas = star.upsert_star(staging)
     return deltas["fact"].select("sighting_id", "location_id", "region_id")
 
 

@@ -65,8 +65,8 @@ def cmd_ingest(args: argparse.Namespace) -> int:
         ).filter(F.col("name").isNotNull())
         store.get_or_insert(v1_names)
         staging = wire_to_staging(msgs, store.read())
-        sink(staging, epoch_id)
-        print(f"epoch={epoch_id} invalid={n_bad} status={sink.stats[-1]['status']}")
+        record = sink(staging, epoch_id)
+        print(f"epoch={epoch_id} invalid={n_bad} status={record['status']}")
 
     if args.stream:
         raw = (

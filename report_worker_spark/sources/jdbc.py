@@ -4,14 +4,15 @@ The reference's sink is ONE MySQL transaction per micro-batch doing 7
 statements (temp table + DISTINCT + anti-joins + 3-way join + INSERT
 IGNORE, reference src/app/controllers/report.py:295-311). Spark's
 ``df.write.jdbc`` is per-table and non-transactional across tables, so
-the atomic path uses a single raw JDBC connection on the driver via
-py4j (java.sql.DriverManager) inside ``foreachBatch`` — batch volumes
-are the reference's ~1k rows, so driver-side batched INSERTs are the
-right tool; the relational heavy lifting already happened in Spark.
+``staged_not_exists_txn`` uses a single raw JDBC connection on the
+driver via py4j (java.sql.DriverManager) inside ``foreachBatch``: each
+delta is loaded into a staging table and promoted with a server-side
+``INSERT .. SELECT .. WHERE NOT EXISTS``, all in one transaction. The
+relational heavy lifting already happened in Spark (``star.upsert_star``).
 
-No database exists in the test environment: everything here is gated
-behind the connection actually being reachable, and the set-algebra
-halves are tested through ``star.upsert_star`` with parquet sinks.
+No MySQL server exists in the test environment; the tests run these
+paths against embedded Derby (bundled with Spark) and pin the MySQL
+statement text.
 """
 
 from __future__ import annotations
@@ -19,6 +20,11 @@ from __future__ import annotations
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+
+# rows per JDBC batch in the driver-side prepared-statement loop
+BATCH_SIZE = 1000
+# deltas above this many rows stage through Spark's distributed writer
+BULK_THRESHOLD = 10_000
 
 
 def read_dim(
@@ -44,119 +50,6 @@ def append_table(df: DataFrame, url: str, table: str, properties: dict[str, str]
     )
 
 
-def transactional_multi_table_write(
-    spark: SparkSession,
-    url: str,
-    writes: Iterable[tuple[str, DataFrame]],
-    user: str | None = None,
-    password: str | None = None,
-    batch_size: int = 1000,
-    insert_verb: str = "INSERT IGNORE INTO",
-    bulk_threshold: int = 10_000,
-    match_keys: dict[str, list[str]] | None = None,
-    stage_prefix: str = "stg_bulk_",
-) -> None:
-    """Atomic multi-table append: one java.sql connection, autocommit
-    off, all tables inserted, single commit; rollback on any failure
-    (S6/ST1 — effectively-once together with DB unique keys and
-    idempotent anti-joined inputs).
-
-    ``insert_verb`` is the dialect knob: MySQL's ``INSERT IGNORE INTO``
-    (the reference's idempotency backstop) by default; plain
-    ``INSERT INTO`` for engines without it (Derby/Postgres — pair with
-    unique keys + anti-joined inputs).
-
-    AUTO-DISPATCH BY BATCH SIZE: deltas at the reference's micro-batch
-    envelope (≤``bulk_threshold`` rows per table) run the driver-side
-    Py4J prepared-statement loop — cheapest for ~1k rows/txn. Any
-    larger delta switches the WHOLE call to the bulk path: each delta
-    is loaded into a ``stage_prefix + table`` staging table by Spark's
-    DISTRIBUTED JDBC writer (never ``toLocalIterator``), then a single
-    transaction runs server-side ``INSERT .. SELECT`` from every stage
-    into its target — commit or rollback together, so target-table
-    atomicity is identical to the small path (staging tables are
-    scratch and truncated up front). Pass ``match_keys[table] = [key,
-    ...]`` to guard a target's insert with the null-safe NOT EXISTS
-    predicate (idempotent replays even without ``INSERT IGNORE``);
-    the guard is honored on BOTH paths — small keyed deltas stage
-    through the driver loop and promote via the same NOT-EXISTS
-    insert-select, so replay semantics never depend on batch size.
-    Targets absent from ``match_keys`` use plain inserts and keep the
-    verb/unique-key backstop. The dispatch probes each delta with a
-    ``limit(bulk_threshold+1).count()`` (bounded, not a full count),
-    so callers re-using a lazily-computed DataFrame should persist it
-    (foreachBatch batch frames already are).
-
-    Duplicate target tables in one call are rejected (they would share
-    a staging table and double-promote). Staging tables are named
-    ``stage_prefix + table`` per PROCESS, not per call: concurrent
-    transactions against the same database with the same
-    ``stage_prefix`` corrupt each other's staging — this sink is
-    single-writer by design (one streaming query per target star, the
-    reference's consumer-group shape); give concurrent writers
-    distinct ``stage_prefix`` values.
-    """
-    writes = list(writes)
-    _reject_duplicate_targets(t for t, _ in writes)
-    match_keys = match_keys or {}
-    if any(
-        df.limit(bulk_threshold + 1).count() > bulk_threshold for _t, df in writes
-    ):
-        _bulk_staged_txn(
-            spark,
-            url,
-            writes,
-            user=user,
-            password=password,
-            insert_verb=insert_verb,
-            match_keys=match_keys,
-            stage_prefix=stage_prefix,
-        )
-        return
-    jvm = spark._jvm  # noqa: SLF001 — raw JDBC is the documented escape hatch
-    if user is not None:
-        conn = jvm.java.sql.DriverManager.getConnection(url, user, password)
-    else:
-        conn = jvm.java.sql.DriverManager.getConnection(url)
-    try:
-        # staging DDL for keyed targets runs OUTSIDE the txn (MySQL DDL
-        # auto-commits anyway); idempotent via the narrowed exists-check
-        for table, df in writes:
-            if table in match_keys:
-                _ensure_stage(conn, df, stage_prefix + table)
-        conn.setAutoCommit(False)
-        for table, df in writes:
-            keys = match_keys.get(table)
-            if keys:
-                # same NOT-EXISTS promotion as the bulk path — replay
-                # idempotency is size-independent (ADVICE r11)
-                stage = stage_prefix + table
-                st = conn.createStatement()
-                st.execute(f"DELETE FROM {stage}")
-                st.close()
-                _driver_batch_insert(conn, df, "INSERT INTO", stage, batch_size)
-                nullable = {
-                    f.name
-                    for f in df.schema.fields
-                    if f.nullable and f.name in keys
-                }
-                st = conn.createStatement()
-                st.executeUpdate(
-                    not_exists_insert_sql(
-                        insert_verb, table, stage, df.columns, keys, nullable
-                    )
-                )
-                st.close()
-            else:
-                _driver_batch_insert(conn, df, insert_verb, table, batch_size)
-        conn.commit()
-    except Exception:
-        conn.rollback()
-        raise
-    finally:
-        conn.close()
-
-
 def _reject_duplicate_targets(names: Iterable[str]) -> None:
     names = list(names)
     dupes = sorted({n for n in names if names.count(n) > 1})
@@ -168,12 +61,10 @@ def _reject_duplicate_targets(names: Iterable[str]) -> None:
         )
 
 
-def _driver_batch_insert(
-    conn, df: DataFrame, verb: str, table: str, batch_size: int
-) -> None:
+def _driver_batch_insert(conn, df: DataFrame, verb: str, table: str) -> None:
     """The small-delta prepared-statement loop (reference envelope
     ~1k rows/txn): rows cross on the driver connection in
-    ``batch_size`` JDBC batches."""
+    ``BATCH_SIZE`` JDBC batches."""
     cols = df.columns
     ps = conn.prepareStatement(insert_sql(verb, table, cols))
     n = 0
@@ -182,7 +73,7 @@ def _driver_batch_insert(
             ps.setObject(i, row[c])
         ps.addBatch()
         n += 1
-        if n % batch_size == 0:
+        if n % BATCH_SIZE == 0:
             ps.executeBatch()
     ps.executeBatch()
     ps.close()
@@ -237,84 +128,6 @@ def _ensure_stage(conn, df: DataFrame, stage: str) -> None:
             raise
     finally:
         st.close()
-
-
-def _bulk_staged_txn(
-    spark: SparkSession,
-    url: str,
-    writes: list[tuple[str, DataFrame]],
-    user: str | None,
-    password: str | None,
-    insert_verb: str,
-    match_keys: dict[str, list[str]],
-    stage_prefix: str,
-) -> dict[str, int]:
-    """Bulk half of the S6 auto-dispatch: distributed staging loads +
-    one server-side insert-select transaction. The bulk rows cross the
-    JDBC boundary through Spark's parallel writer tasks; the driver
-    connection only issues DDL/DELETE/INSERT-SELECT statements, so
-    per-call driver cost is O(tables), not O(rows). Returns per-target
-    inserted-row counts (``executeUpdate``).
-
-    SINGLE-WRITER per ``stage_prefix``: staging tables are fixed-name
-    scratch (truncated at call start), so two concurrent transactions
-    sharing a prefix corrupt each other's staging — concurrent writers
-    must use distinct prefixes (see transactional_multi_table_write)."""
-    _reject_duplicate_targets(t for t, _ in writes)
-    jvm = spark._jvm  # noqa: SLF001 — raw JDBC is the documented escape hatch
-    props = {}
-    if user is not None:
-        props["user"] = user
-        props["password"] = password or ""
-    if user is not None:
-        conn = jvm.java.sql.DriverManager.getConnection(url, user, password)
-    else:
-        conn = jvm.java.sql.DriverManager.getConnection(url)
-    inserted: dict[str, int] = {}
-    try:
-        # staging prep runs OUTSIDE the txn (MySQL DDL auto-commits
-        # anyway): idempotent CREATE, then truncate leftovers so a
-        # crashed earlier attempt can't double-insert
-        for table, df in writes:
-            stage = stage_prefix + table
-            _ensure_stage(conn, df, stage)
-            st = conn.createStatement()
-            st.execute(f"DELETE FROM {stage}")
-            st.close()
-        # distributed, parallel staging loads — the scale path
-        for table, df in writes:
-            append_table(df, url, stage_prefix + table, props or None)
-        # one atomic promotion across every target
-        conn.setAutoCommit(False)
-        try:
-            for table, df in writes:
-                stage = stage_prefix + table
-                cols = df.columns
-                keys = match_keys.get(table)
-                if keys:
-                    nullable = {
-                        f.name
-                        for f in df.schema.fields
-                        if f.nullable and f.name in keys
-                    }
-                    sql = not_exists_insert_sql(
-                        insert_verb, table, stage, cols, keys, nullable
-                    )
-                else:
-                    sql = (
-                        f"{insert_verb} {table} ({', '.join(cols)}) "
-                        f"SELECT {', '.join(cols)} FROM {stage}"
-                    )
-                st = conn.createStatement()
-                inserted[table] = st.executeUpdate(sql)
-                st.close()
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
-    finally:
-        conn.close()
-    return inserted
 
 
 _SQL_TYPES = {
@@ -394,55 +207,84 @@ def not_exists_insert_sql(
     )
 
 
+def _connect(spark: SparkSession, url: str, user: str | None, password: str | None):
+    jvm = spark._jvm  # noqa: SLF001 — raw JDBC is the documented escape hatch
+    if user is not None:
+        return jvm.java.sql.DriverManager.getConnection(url, user, password)
+    return jvm.java.sql.DriverManager.getConnection(url)
+
+
+def _update(conn, sql: str) -> int:
+    st = conn.createStatement()
+    try:
+        return st.executeUpdate(sql)
+    finally:
+        st.close()
+
+
+def _promote(conn, verb: str, target: str, stage: str, df: DataFrame, keys: list[str]) -> int:
+    """Run one stage's NOT-EXISTS insert-select; returns the inserted
+    row count. The null-safe OR form is used only on the keys the
+    schema says can be NULL."""
+    nullable = {f.name for f in df.schema.fields if f.nullable and f.name in keys}
+    return _update(
+        conn, not_exists_insert_sql(verb, target, stage, df.columns, keys, nullable)
+    )
+
+
 def staged_not_exists_txn(
     spark: SparkSession,
     url: str,
     stages: Iterable[tuple[str, DataFrame, list[str]]],
     user: str | None = None,
     password: str | None = None,
-    batch_size: int = 1000,
     insert_verb: str = "INSERT IGNORE INTO",
     stage_prefix: str = "stg_",
-    bulk_threshold: int = 10_000,
 ) -> dict[str, int]:
     """The reference's server-side txn shape (reference
     src/app/controllers/report.py:84-311): upload each small delta into a
     staging table, then run ``INSERT .. SELECT .. WHERE NOT EXISTS``
     entirely inside the database — the existence check runs against the
     target's indexes and NEVER ships the target table to Spark. One
-    transaction covers staging loads + all insert-selects.
+    transaction covers staging loads + all insert-selects; any failure
+    rolls every target back (S6/ST1 — effectively-once together with DB
+    unique keys).
 
     ``stages``: (target_table, delta_df, match_key_cols) triples. Returns
     per-target inserted-row counts (from ``executeUpdate``).
 
+    ``insert_verb`` is the dialect knob: MySQL's ``INSERT IGNORE INTO``
+    (the reference's idempotency backstop) by default; plain
+    ``INSERT INTO`` for engines without it (Derby/Postgres). The
+    NOT-EXISTS guard, not the verb, makes replays insert nothing.
+
     Scale: only the per-batch delta (reference envelope ≤1k rows) crosses
     the JDBC boundary; target dim/fact size is irrelevant to batch cost.
-    Deltas above ``bulk_threshold`` rows auto-dispatch to the
-    distributed staged-promotion path (same NOT-EXISTS guard, staging
-    loaded by Spark's parallel JDBC writer instead of the driver's
-    prepared-statement loop) — same contract, O(tables) driver cost.
+    If any delta has more than ``BULK_THRESHOLD`` rows (probed with a
+    bounded ``limit(..).count()``, so callers should persist a lazily
+    computed delta), the whole call switches to ``_bulk_staged_txn``:
+    same NOT-EXISTS guard, staging loaded by Spark's parallel JDBC
+    writer instead of the driver's prepared-statement loop.
+
+    Duplicate target tables in one call are rejected (they would share
+    a staging table and double-promote). Staging tables are named
+    ``stage_prefix + table`` per PROCESS, not per call: concurrent
+    transactions against the same database with the same
+    ``stage_prefix`` corrupt each other's staging — this sink is
+    single-writer by design (one streaming query per target star, the
+    reference's consumer-group shape); give concurrent writers
+    distinct ``stage_prefix`` values.
     """
     stages = list(stages)
     _reject_duplicate_targets(t for t, _df, _k in stages)
     if any(
-        df.limit(bulk_threshold + 1).count() > bulk_threshold
+        df.limit(BULK_THRESHOLD + 1).count() > BULK_THRESHOLD
         for _t, df, _k in stages
     ):
         return _bulk_staged_txn(
-            spark,
-            url,
-            [(t, df) for t, df, _k in stages],
-            user=user,
-            password=password,
-            insert_verb=insert_verb,
-            match_keys={t: k for t, _df, k in stages},
-            stage_prefix=stage_prefix,
+            spark, url, stages, user, password, insert_verb, stage_prefix
         )
-    jvm = spark._jvm  # noqa: SLF001 — raw JDBC is the documented escape hatch
-    if user is not None:
-        conn = jvm.java.sql.DriverManager.getConnection(url, user, password)
-    else:
-        conn = jvm.java.sql.DriverManager.getConnection(url)
+    conn = _connect(spark, url, user, password)
     inserted: dict[str, int] = {}
     try:
         # staging DDL is idempotent and outside the txn (MySQL DDL
@@ -452,32 +294,59 @@ def staged_not_exists_txn(
         conn.setAutoCommit(False)
         for target, df, keys in stages:
             stage = stage_prefix + target
-            st = conn.createStatement()
-            st.execute(f"DELETE FROM {stage}")
-            st.close()
-            cols = df.columns
-            _driver_batch_insert(conn, df, "INSERT INTO", stage, batch_size)
-            st = conn.createStatement()
-            inserted[target] = st.executeUpdate(
-                not_exists_insert_sql(
-                    insert_verb,
-                    target,
-                    stage,
-                    cols,
-                    keys,
-                    # schema-driven: null-safe OR only where NULL can occur
-                    {
-                        f.name
-                        for f in df.schema.fields
-                        if f.nullable and f.name in keys
-                    },
-                )
-            )
-            st.close()
+            _update(conn, f"DELETE FROM {stage}")
+            _driver_batch_insert(conn, df, "INSERT INTO", stage)
+            inserted[target] = _promote(conn, insert_verb, target, stage, df, keys)
         conn.commit()
     except Exception:
         conn.rollback()
         raise
+    finally:
+        conn.close()
+    return inserted
+
+
+def _bulk_staged_txn(
+    spark: SparkSession,
+    url: str,
+    stages: list[tuple[str, DataFrame, list[str]]],
+    user: str | None,
+    password: str | None,
+    insert_verb: str,
+    stage_prefix: str,
+) -> dict[str, int]:
+    """Bulk half of ``staged_not_exists_txn``: distributed staging loads
+    + one server-side insert-select transaction. The bulk rows cross the
+    JDBC boundary through Spark's parallel writer tasks (never
+    ``toLocalIterator``); the driver connection only issues
+    DDL/DELETE/INSERT-SELECT statements, so per-call driver cost is
+    O(tables), not O(rows)."""
+    props = {"user": user, "password": password or ""} if user is not None else None
+    conn = _connect(spark, url, user, password)
+    inserted: dict[str, int] = {}
+    try:
+        # staging prep runs OUTSIDE the txn (MySQL DDL auto-commits
+        # anyway): idempotent CREATE, then truncate leftovers so a
+        # crashed earlier attempt can't double-insert
+        for target, df, _keys in stages:
+            stage = stage_prefix + target
+            _ensure_stage(conn, df, stage)
+            _update(conn, f"DELETE FROM {stage}")
+        # distributed, parallel staging loads — the scale path
+        for target, df, _keys in stages:
+            append_table(df, url, stage_prefix + target, props)
+        # one atomic promotion across every target
+        conn.setAutoCommit(False)
+        try:
+            for target, df, keys in stages:
+                stage = stage_prefix + target
+                inserted[target] = _promote(
+                    conn, insert_verb, target, stage, df, keys
+                )
+            conn.commit()
+        except Exception:
+            conn.rollback()
+            raise
     finally:
         conn.close()
     return inserted
@@ -493,8 +362,10 @@ class JdbcStarSink:
     into Spark: existence checks hit the target tables' own indexes, so
     per-batch cost is O(batch), not O(warehouse).
 
-    Use as ``writeStream.foreachBatch(JdbcStarSink(url, ...))``. The
-    database's unique keys remain the at-least-once backstop.
+    Use as ``writeStream.foreachBatch(JdbcStarSink(url, ...))``. Each
+    call returns the epoch's record, ``{"epoch", "status", "inserted"}``
+    with per-table inserted-row counts. The database's unique keys
+    remain the at-least-once backstop.
     """
 
     # the reference fact's columns (01_tables.sql:129-140)
@@ -508,13 +379,11 @@ class JdbcStarSink:
     def __init__(
         self,
         url: str,
-        key_mode: str = "hash",
         insert_verb: str = "INSERT IGNORE INTO",
         table_names: dict[str, str] | None = None,
         fact_columns: list[str] | None = None,
     ) -> None:
         self.url = url
-        self.key_mode = key_mode
         self.insert_verb = insert_verb
         self.tables = table_names or {
             "sighting": "report_sighting",
@@ -525,55 +394,32 @@ class JdbcStarSink:
         # the fact delta carries the full staging row + FK ids; project
         # to the target table's declared columns before the insert
         self.fact_columns = fact_columns or self.DEFAULT_FACT_COLUMNS
-        self.stats: list[dict] = []
 
-    def _dim_match_keys(self, id_col: str, natural_keys: list[str]) -> list[str]:
-        # hash ids are a pure function of the natural key, so existence
-        # can be checked on the indexed surrogate id alone; rank ids are
-        # per-batch, so rank mode matches on the natural key instead
-        return [id_col] if self.key_mode == "hash" else natural_keys
+    def __call__(self, batch: DataFrame, epoch_id: int) -> dict:
+        from .. import star
 
-    def __call__(self, batch: DataFrame, epoch_id: int) -> None:
         # the batch feeds four delta scans; release it with the epoch
         batch.cache()
         try:
-            self._upsert(batch, epoch_id)
+            deltas = star.upsert_star(batch)
+            # hash ids are a pure function of the natural key, so each
+            # dim's existence check runs on its indexed surrogate id alone
+            inserted = staged_not_exists_txn(
+                batch.sparkSession,
+                self.url,
+                [
+                    (self.tables["sighting"], deltas["sighting"], ["sighting_id"]),
+                    (self.tables["gear"], deltas["gear"], ["gear_id"]),
+                    (self.tables["location"], deltas["location"], ["location_id"]),
+                    # fact PK (01_tables.sql:139); INSERT IGNORE's backstop
+                    (
+                        self.tables["fact"],
+                        deltas["fact"].select(*self.fact_columns),
+                        ["sighting_id", "location_id", "region_id"],
+                    ),
+                ],
+                insert_verb=self.insert_verb,
+            )
         finally:
             batch.unpersist()
-
-    def _upsert(self, batch: DataFrame, epoch_id: int) -> None:
-        from .. import star
-        from ..schemas import GEAR_KEYS, LOCATION_KEYS, SIGHTING_KEYS
-
-        spark = batch.sparkSession
-        deltas = star.upsert_star(batch, key_mode=self.key_mode)
-        fact = deltas["fact"].select(*self.fact_columns)
-        inserted = staged_not_exists_txn(
-            spark,
-            self.url,
-            [
-                (
-                    self.tables["sighting"],
-                    deltas["sighting"],
-                    self._dim_match_keys("sighting_id", SIGHTING_KEYS),
-                ),
-                (
-                    self.tables["gear"],
-                    deltas["gear"],
-                    self._dim_match_keys("gear_id", GEAR_KEYS),
-                ),
-                (
-                    self.tables["location"],
-                    deltas["location"],
-                    self._dim_match_keys("location_id", LOCATION_KEYS),
-                ),
-                # fact PK (01_tables.sql:139); INSERT IGNORE's backstop
-                (
-                    self.tables["fact"],
-                    fact,
-                    ["sighting_id", "location_id", "region_id"],
-                ),
-            ],
-            insert_verb=self.insert_verb,
-        )
-        self.stats.append({"epoch": epoch_id, "status": "ok", "inserted": inserted})
+        return {"epoch": epoch_id, "status": "ok", "inserted": inserted}

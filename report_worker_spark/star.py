@@ -21,6 +21,9 @@ Surrogate keys: MySQL auto-increment has no distributed analog. Two modes:
   coordination; collision odds at 64-bit are ~n²/2⁶⁵.
 - ``rank``  (oracle-parity path): ``dense_rank`` over the natural key —
   reproducible in ANSI SQL, but implies a global sort; test-scale only.
+  The oracle-twinned catalog queries build rank-mode dims with
+  ``build_dim`` and attach them with ``resolve_fk``; ``upsert_star``,
+  the ingest path, is hash-only.
 """
 
 from __future__ import annotations
@@ -102,17 +105,13 @@ def resolve_fk(
     keys: list[str],
     id_col: str,
     null_safe: bool = True,
-    broadcast: bool | None = None,
 ) -> DataFrame:
     """Inner-join ``fact`` to ``dim`` on the natural key, attaching
     ``id_col`` (J4, reference report.py:256-283). Null-safe by default —
     the reference's MySQL ``=`` drops NULL-gear facts (documented bug).
 
-    ``broadcast``: ``True`` forces a broadcast hint (callers that KNOW
-    the dim is trigger-bounded, e.g. the streaming micro-batch path);
-    ``False`` never hints; ``None`` (default) leaves the choice to
-    Catalyst statistics + AQE, which broadcasts a dim that measures
-    small at runtime and shuffle-joins one that doesn't — an
+    No broadcast hint: Catalyst statistics + AQE broadcast a dim that
+    measures small at runtime and shuffle-join one that doesn't — an
     unconditional hint here would OOM the driver on a large backfill.
     """
     d = dim.select(*keys, id_col)
@@ -121,79 +120,46 @@ def resolve_fk(
         if null_safe
         else reduce(lambda a, b: a & b, [fact[k] == d[k] for k in keys])
     )
-    out = fact.join(F.broadcast(d) if broadcast else d, on=cond, how="inner")
+    out = fact.join(d, on=cond, how="inner")
     # drop the dim's copy of the key cols (ambiguous names otherwise)
     return out.drop(*[d[k] for k in keys])
 
 
-def upsert_star(
-    batch: DataFrame,
-    key_mode: str = "hash",
-    existing: dict[str, DataFrame] | None = None,
-    broadcast_dims: bool | None = None,
-) -> dict[str, DataFrame]:
-    """The reference's 7-statement MySQL transaction as set algebra.
+def upsert_star(batch: DataFrame) -> dict[str, DataFrame]:
+    """The reference's 7-statement MySQL transaction as set algebra,
+    with hash surrogate ids.
 
     ``batch`` is a staging-shaped DataFrame (schemas.STG_REPORT_SCHEMA
     naming). Returns the four deltas to append: sighting / gear /
-    location dims and the FK-resolved fact. ``existing`` maps dim name →
-    current dim contents for the NOT-EXISTS guard (omit for bootstrap).
-    ``batch`` feeds four scans; a caller that writes the deltas should
-    cache it for their lifetime and unpersist it afterwards (the
-    streaming sinks do, per epoch).
+    location dims and the FK-resolved fact. The dims are the batch's
+    full DISTINCT key sets; the NOT-EXISTS guard against rows already
+    stored is the writer's job (server-side in ``JdbcStarSink``, epoch
+    partition overwrite for the parquet writers). ``batch`` feeds four
+    scans; a caller that writes the deltas should cache it for their
+    lifetime and unpersist it afterwards (the streaming sinks do, per
+    epoch).
 
     Reference: src/app/controllers/report.py:84-311.
     """
-    # full per-batch dims: the fact must resolve against ALL the batch's
-    # keys (hash ids are deterministic, so they agree with any existing
-    # copies of the same natural key)
-    sight_full = build_dim(batch, SIGHTING_KEYS, "sighting_id", key_mode)
-    gear_full = build_dim(batch, GEAR_KEYS, "gear_id", key_mode)
-    loc_full = build_dim(batch, LOCATION_KEYS, "location_id", key_mode)
+    sight = build_dim(batch, SIGHTING_KEYS, "sighting_id")
+    gear = build_dim(batch, GEAR_KEYS, "gear_id")
+    loc = build_dim(batch, LOCATION_KEYS, "location_id")
 
-    # deltas to append: NOT-EXISTS guard against the current dim state
-    sight, gear, loc = sight_full, gear_full, loc_full
-    if existing:
-        if "sighting" in existing:
-            sight = anti_join_new(sight_full, existing["sighting"], SIGHTING_KEYS)
-        if "gear" in existing:
-            gear = anti_join_new(gear_full, existing["gear"], GEAR_KEYS)
-        if "location" in existing:
-            loc = anti_join_new(loc_full, existing["location"], LOCATION_KEYS)
-
+    # Hash surrogate ids are pure row-local functions of the natural
+    # key, and the dims above are DISTINCT projections of this very
+    # batch — so the three null-safe FK-resolve joins would be identity
+    # lookups: every fact row matches exactly one dim row, and the
+    # attached id equals xxhash64 over the fact's own key columns
+    # (null-safe-equal tuples hash identically). Compute the ids
+    # directly instead of shuffling the fact three times through join
+    # exchanges (guide §2.4 — remove shuffles outright).
     fact = batch
-    if key_mode == "hash":
-        # Hash surrogate ids are pure row-local functions of the natural
-        # key, and the full dims above are DISTINCT projections of this
-        # very batch — so the three null-safe FK-resolve joins are
-        # identity lookups: every fact row matches exactly one dim row,
-        # and the attached id equals xxhash64 over the fact's own key
-        # columns (null-safe-equal tuples hash identically). Compute the
-        # ids directly instead of shuffling the fact three times through
-        # join exchanges (guide §2.4 — remove shuffles outright). Rank
-        # mode cannot shortcut: dense_rank ids exist only on the dim.
-        for keys, id_col in (
-            (SIGHTING_KEYS, "sighting_id"),
-            (GEAR_KEYS, "gear_id"),
-            (LOCATION_KEYS, "location_id"),
-        ):
-            fact = fact.withColumn(id_col, surrogate_key(keys, "hash"))
-    else:
-        # J4: chained null-safe equi-joins resolving the three surrogate
-        # FKs against the FULL dims (the anti-joined deltas would drop
-        # facts whose keys already exist; reusing the frames avoids
-        # rebuilding each distinct-aggregation a second time).
-        fact = resolve_fk(
-            fact, sight_full, SIGHTING_KEYS, "sighting_id",
-            broadcast=broadcast_dims,
-        )
-        fact = resolve_fk(
-            fact, gear_full, GEAR_KEYS, "gear_id", broadcast=broadcast_dims
-        )
-        fact = resolve_fk(
-            fact, loc_full, LOCATION_KEYS, "location_id",
-            broadcast=broadcast_dims,
-        )
+    for keys, id_col in (
+        (SIGHTING_KEYS, "sighting_id"),
+        (GEAR_KEYS, "gear_id"),
+        (LOCATION_KEYS, "location_id"),
+    ):
+        fact = fact.withColumn(id_col, surrogate_key(keys, "hash"))
     # fact PK is (sighting_id, location_id, region_id) (01_tables.sql:139);
     # INSERT IGNORE ⇒ keep one row per PK.
     fact = fact.dropDuplicates(["sighting_id", "location_id", "region_id"])

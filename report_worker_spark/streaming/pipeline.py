@@ -6,13 +6,13 @@ dispatch → v1 name→id resolve / v2 passthrough → ts normalize → bounds
 → clamp → flatten → batch(1000 rows/60 s) → one MySQL txn → DLQ on
 failure. Spark mapping: ``readStream`` → ``wire_to_staging`` (pure
 column exprs, this module) → ``foreachBatch(StarUpsertSink)`` where the
-trigger interval IS the batcher (A3) and the sink is idempotent
-(anti-join + epoch tracking, ST1).
+trigger interval IS the batcher (A3) and replays are idempotent
+(epoch-partition overwrite or DB keys, ST1).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -139,46 +139,33 @@ class StarUpsertSink:
     """foreachBatch sink: staging batch → star-schema deltas → writer.
 
     ``writer(table_name, delta_df, epoch_id)`` performs the actual
-    append (parquet/Delta/JDBC txn). Idempotency: deltas are anti-joined
-    against ``current(table_name)`` when provided, and the DB's unique
-    keys stay as the at-least-once backstop (ST1). Failures route the
-    batch to ``dlq`` instead of poisoning the source topic (ST6).
+    append (parquet/Delta/JDBC txn). Replay safety is the writer's:
+    ``epoch_partitioned_writer`` and ``date_partitioned_writer``
+    overwrite the epoch's own partition, so a replayed micro-batch
+    replaces its output instead of appending it twice, and a database
+    writer's unique keys are the at-least-once backstop (ST1). Failures
+    route the batch to ``dlq`` instead of poisoning the source topic
+    (ST6). Each call returns the epoch's record, ``{"epoch", "status"}``
+    with status ``"ok"`` or ``"dlq"``.
     """
 
     writer: Callable[[str, DataFrame, int], None]
-    current: Callable[[str], DataFrame] | None = None
     dlq: Callable[[DataFrame, int, Exception], None] | None = None
-    key_mode: str = "hash"
-    stats: list[dict] = field(default_factory=list)
 
-    def __call__(self, batch: DataFrame, epoch_id: int) -> None:
+    def __call__(self, batch: DataFrame, epoch_id: int) -> dict:
         # the batch feeds four delta scans, like the reference's MEMORY
         # temp table; release it with the epoch so a stream never holds
         # more than one cached batch
         batch.cache()
         try:
-            existing = None
-            if self.current is not None:
-                existing = {
-                    name: self.current(name)
-                    for name in ("sighting", "gear", "location")
-                }
-            # micro-batches are trigger-bounded (maxOffsetsPerTrigger),
-            # so the per-batch distinct dims are always broadcast-sized
-            deltas = star.upsert_star(
-                batch,
-                key_mode=self.key_mode,
-                existing=existing,
-                broadcast_dims=True,
-            )
-            for name, df in deltas.items():
+            for name, df in star.upsert_star(batch).items():
                 self.writer(name, df, epoch_id)
-            self.stats.append({"epoch": epoch_id, "status": "ok"})
+            return {"epoch": epoch_id, "status": "ok"}
         except Exception as exc:  # noqa: BLE001 — DLQ semantics need breadth
             if self.dlq is None:
                 raise
             self.dlq(batch, epoch_id, exc)
-            self.stats.append({"epoch": epoch_id, "status": "dlq"})
+            return {"epoch": epoch_id, "status": "dlq"}
         finally:
             batch.unpersist()
 

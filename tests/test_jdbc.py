@@ -45,68 +45,13 @@ def test_transactional_multi_table_commit(spark, derby_url):
     _exec(spark, derby_url, "CREATE TABLE fact (sid BIGINT, region INT)")
     sight = spark.createDataFrame([(10, 20), (11, 21)], "sid long, rid long")
     fact = spark.createDataFrame([(10, 1)], "sid long, region int")
-    j.transactional_multi_table_write(
-        spark, derby_url, [("sighting", sight), ("fact", fact)],
+    out = j.staged_not_exists_txn(
+        spark, derby_url, [("sighting", sight, ["sid"]), ("fact", fact, ["sid"])],
         insert_verb="INSERT INTO",
     )
+    assert out == {"sighting": 2, "fact": 1}
     assert j.read_dim(spark, derby_url, "sighting").count() == 2
     assert j.read_dim(spark, derby_url, "fact").count() == 1
-
-
-def test_transactional_rollback_on_failure(spark, derby_url):
-    """Second table's insert fails (missing table) → the first table's
-    rows must be rolled back: the atomicity the reference gets from one
-    MySQL transaction (S6/ST1)."""
-    _exec(spark, derby_url, "CREATE TABLE gear (gid BIGINT)")
-    good = spark.createDataFrame([(1,), (2,)], "gid long")
-    with pytest.raises(Exception):
-        j.transactional_multi_table_write(
-            spark, derby_url,
-            [("gear", good), ("does_not_exist", good)],
-            insert_verb="INSERT INTO",
-        )
-    assert j.read_dim(spark, derby_url, "gear").count() == 0  # rolled back
-
-
-def test_bulk_dispatch_50k_never_enters_driver_loop(
-    spark, derby_url, monkeypatch
-):
-    """A 50k-row delta must auto-dispatch to the staged bulk path: the
-    rows cross the JDBC boundary through Spark's distributed writer,
-    NEVER ``toLocalIterator`` (the Py4J row loop is a silent foot-gun
-    for bulk loads — VERDICT r10). Replaying the same batch with
-    ``match_keys`` inserts nothing (idempotent without INSERT IGNORE)."""
-    from pyspark.sql import DataFrame
-
-    # PK on the match key: the NOT-EXISTS replay probes the target's
-    # own index (the reference tables all carry unique keys) — without
-    # it Derby's existence check is a 50k×50k table scan
-    _exec(
-        spark,
-        derby_url,
-        "CREATE TABLE bulk_t (id BIGINT NOT NULL PRIMARY KEY, v INTEGER)",
-    )
-    df = spark.range(50_000).select(
-        "id", (F.col("id") % 7).cast("int").alias("v")
-    )
-
-    def boom(self, *a, **k):  # noqa: ANN001
-        raise AssertionError("bulk path must not collect via the driver")
-
-    monkeypatch.setattr(DataFrame, "toLocalIterator", boom)
-    j.transactional_multi_table_write(
-        spark, derby_url, [("bulk_t", df)], insert_verb="INSERT INTO"
-    )
-    assert _count(spark, derby_url, "bulk_t") == 50_000
-    # replay: NOT-EXISTS guard on the key keeps it idempotent
-    j.transactional_multi_table_write(
-        spark,
-        derby_url,
-        [("bulk_t", df)],
-        insert_verb="INSERT INTO",
-        match_keys={"bulk_t": ["id"]},
-    )
-    assert _count(spark, derby_url, "bulk_t") == 50_000
 
 
 def test_bulk_dispatch_rolls_back_atomically(spark, derby_url):
@@ -116,34 +61,38 @@ def test_bulk_dispatch_rolls_back_atomically(spark, derby_url):
     _exec(spark, derby_url, "CREATE TABLE bulk_a (id BIGINT)")
     big = spark.range(20_000).select("id")
     with pytest.raises(Exception):
-        j.transactional_multi_table_write(
+        j.staged_not_exists_txn(
             spark,
             derby_url,
-            [("bulk_a", big), ("bulk_missing", big)],
+            [("bulk_a", big, ["id"]), ("bulk_missing", big, ["id"])],
             insert_verb="INSERT INTO",
         )
     assert _count(spark, derby_url, "bulk_a") == 0
 
 
 def test_small_batches_stay_on_the_row_loop(spark, derby_url, monkeypatch):
-    """Deltas at the reference envelope (≤ bulk_threshold) keep the
-    single-connection prepared-statement txn — no staging tables are
-    created for a 3-row write."""
+    """Deltas at the reference envelope (≤ BULK_THRESHOLD rows) keep the
+    single-connection prepared-statement txn — a 3-row write never
+    reaches Spark's distributed JDBC writer."""
     _exec(spark, derby_url, "CREATE TABLE small_t (id BIGINT)")
     df = spark.createDataFrame([(1,), (2,), (3,)], "id long")
-    j.transactional_multi_table_write(
-        spark, derby_url, [("small_t", df)], insert_verb="INSERT INTO"
+
+    def boom(*a, **k):  # noqa: ANN001
+        raise AssertionError("small deltas must not use the bulk writer")
+
+    monkeypatch.setattr(j, "append_table", boom)
+    out = j.staged_not_exists_txn(
+        spark, derby_url, [("small_t", df, ["id"])], insert_verb="INSERT INTO"
     )
+    assert out == {"small_t": 3}
     assert _count(spark, derby_url, "small_t") == 3
-    with pytest.raises(Exception):
-        _count(spark, derby_url, "stg_bulk_small_t")  # never created
 
 
 def test_null_values_cross_the_boundary(spark, derby_url):
     _exec(spark, derby_url, "CREATE TABLE g (gid BIGINT, head INT)")
     df = spark.createDataFrame([(1, None), (2, 5)], "gid long, head int")
-    j.transactional_multi_table_write(
-        spark, derby_url, [("g", df)], insert_verb="INSERT INTO"
+    j.staged_not_exists_txn(
+        spark, derby_url, [("g", df, ["gid"])], insert_verb="INSERT INTO"
     )
     got = j.read_dim(spark, derby_url, "g")
     got = got.toDF(*[c.lower() for c in got.columns])  # Derby uppercases
@@ -225,13 +174,12 @@ def test_star_sink_is_o_batch_not_o_warehouse(spark, derby_url, monkeypatch):
     monkeypatch.setattr(jmod, "read_dim", no_reads)
     sink = j.JdbcStarSink(derby_url, insert_verb="INSERT INTO")
     staging = _staging(spark, n=400, seed=23)
-    sink(staging, 0)
-    first = sink.stats[0]["inserted"]
+    first = sink(staging, 0)["inserted"]
     assert first["report"] > 0
     assert _count(spark, derby_url, "report") == 5000 + first["report"]
 
-    sink(staging, 1)  # replay: server-side NOT EXISTS admits nothing
-    assert sink.stats[1]["inserted"] == {
+    # replay: server-side NOT EXISTS admits nothing
+    assert sink(staging, 1)["inserted"] == {
         "report_sighting": 0, "report_gear": 0, "report_location": 0, "report": 0,
     }
     assert _count(spark, derby_url, "report") == 5000 + first["report"]
@@ -246,13 +194,12 @@ def test_star_sink_incremental_batches(spark, derby_url):
     sink = j.JdbcStarSink(derby_url, insert_verb="INSERT INTO")
     a = _staging(spark, n=400, seed=23)
     both = _staging(spark, n=600, seed=23)  # same generator: superset of a
-    sink(a, 0)
-    sink(both, 1)
+    n_a = sink(a, 0)["inserted"]
+    n_both = sink(both, 1)["inserted"]
     # each epoch's batch is released with the epoch
     from pyspark import StorageLevel
 
     assert a.storageLevel == both.storageLevel == StorageLevel.NONE
-    n_a, n_both = sink.stats[0]["inserted"], sink.stats[1]["inserted"]
     assert n_both["report"] > 0  # the 200 extra reports' new PKs only
     # total equals one clean load of `both` into a fresh star
     assert _count(spark, derby_url, "report") == n_a["report"] + n_both["report"]
@@ -305,20 +252,20 @@ def test_jdbc_star_sink_stream_idempotent(spark, derby_url):
         .withColumnRenamed("reporting_id", "reporting_id")
     sink = JdbcStarSink(derby_url, insert_verb="INSERT INTO")
 
-    sink(staging, 0)
+    records = [sink(staging, 0)]
     counts1 = {
         t: read_dim(spark, derby_url, t).count()
         for t in ["report_sighting", "report_gear", "report_location", "report"]
     }
     assert all(v > 0 for v in counts1.values())
 
-    sink(staging, 1)  # same batch again — everything anti-joined away
+    records.append(sink(staging, 1))  # same batch again — nothing admitted
     counts2 = {
         t: read_dim(spark, derby_url, t).count()
         for t in ["report_sighting", "report_gear", "report_location", "report"]
     }
     assert counts1 == counts2
-    assert [s["status"] for s in sink.stats] == ["ok", "ok"]
+    assert [r["status"] for r in records] == ["ok", "ok"]
 
 
 def test_staged_txn_rolls_back_atomically(spark, derby_url):
@@ -487,12 +434,10 @@ def test_ansi_fallback_verb_identical_outcomes_on_derby(spark, derby_url):
 
 
 def test_staged_txn_bulk_dispatch_and_counts(spark, derby_url, monkeypatch):
-    """staged_not_exists_txn has the same auto-dispatch: a 50k delta
+    """staged_not_exists_txn auto-dispatches by size: a 50k delta
     loads staging through Spark's distributed writer (never the driver
     row loop), the NOT-EXISTS promotion returns real inserted counts,
     and a replay inserts zero."""
-    from pyspark.sql import DataFrame
-
     _exec(
         spark,
         derby_url,
@@ -505,7 +450,9 @@ def test_staged_txn_bulk_dispatch_and_counts(spark, derby_url, monkeypatch):
     def boom(self, *a, **k):  # noqa: ANN001
         raise AssertionError("bulk path must not collect via the driver")
 
-    monkeypatch.setattr(DataFrame, "toLocalIterator", boom)
+    # patch the concrete class: pyspark's classic DataFrame overrides
+    # toLocalIterator, so a patch on pyspark.sql.DataFrame never fires
+    monkeypatch.setattr(type(df), "toLocalIterator", boom)
     got = j.staged_not_exists_txn(
         spark, derby_url, [("big_dim", df, ["id"])], insert_verb="INSERT INTO"
     )
@@ -517,44 +464,10 @@ def test_staged_txn_bulk_dispatch_and_counts(spark, derby_url, monkeypatch):
     assert _count(spark, derby_url, "big_dim") == 50_000
 
 
-def test_small_delta_honors_match_keys(spark, derby_url):
-    """ADVICE r11 (medium): match_keys must be honored below the bulk
-    threshold too — replaying a small delta with insert_verb='INSERT
-    INTO' and no DB unique key stays idempotent, identical to the bulk
-    path's semantics."""
-    _exec(spark, derby_url, "CREATE TABLE sm_dim (id BIGINT NOT NULL, v INTEGER)")
-    df = spark.range(200).select("id", (F.col("id") % 7).cast("int").alias("v"))
-    for _ in range(2):  # replay the same batch
-        j.transactional_multi_table_write(
-            spark,
-            derby_url,
-            [("sm_dim", df)],
-            insert_verb="INSERT INTO",
-            match_keys={"sm_dim": ["id"]},
-        )
-    assert _count(spark, derby_url, "sm_dim") == 200
-
-
-def test_small_path_without_match_keys_still_plain_inserts(spark, derby_url):
-    """Targets absent from match_keys keep the plain-insert semantics
-    (replay duplicates are the unique-key backstop's job)."""
-    _exec(spark, derby_url, "CREATE TABLE sm_plain (id BIGINT NOT NULL)")
-    df = spark.range(50).select("id")
-    for _ in range(2):
-        j.transactional_multi_table_write(
-            spark, derby_url, [("sm_plain", df)], insert_verb="INSERT INTO"
-        )
-    assert _count(spark, derby_url, "sm_plain") == 100
-
-
 def test_duplicate_target_tables_rejected(spark, derby_url):
     """Duplicate table names in one call would share a staging table
-    and double-promote — rejected up front on every entry point."""
+    and double-promote — rejected up front."""
     df = spark.range(3).select("id")
-    with pytest.raises(ValueError, match="duplicate target tables"):
-        j.transactional_multi_table_write(
-            spark, derby_url, [("t", df), ("t", df)]
-        )
     with pytest.raises(ValueError, match="duplicate target tables"):
         j.staged_not_exists_txn(
             spark, derby_url, [("t", df, ["id"]), ("t", df, ["id"])]
@@ -574,36 +487,6 @@ def test_ensure_stage_propagates_non_exists_ddl_errors(spark, derby_url):
             j._ensure_stage(conn, df, 'bad"name')
     finally:
         conn.close()
-
-
-def test_mixed_keyed_unkeyed_txn_is_atomic(spark, derby_url):
-    """One small txn with a NOT-EXISTS-guarded table AND a plain-insert
-    table: a failure on the second target rolls back BOTH (the keyed
-    staging promotion must not commit early), and a successful retry
-    replays the keyed half idempotently."""
-    _exec(spark, derby_url, "CREATE TABLE mx_dim (id BIGINT NOT NULL)")
-    dim = spark.range(30).select("id")
-    bad = spark.range(3).select(F.col("id").alias("nope"))
-    with pytest.raises(Exception):
-        j.transactional_multi_table_write(
-            spark,
-            derby_url,
-            [("mx_dim", dim), ("mx_missing_table", bad)],
-            insert_verb="INSERT INTO",
-            match_keys={"mx_dim": ["id"]},
-        )
-    assert _count(spark, derby_url, "mx_dim") == 0  # rolled back
-    _exec(spark, derby_url, "CREATE TABLE mx_plain (id BIGINT NOT NULL)")
-    for _ in range(2):  # replay: keyed half stays idempotent
-        j.transactional_multi_table_write(
-            spark,
-            derby_url,
-            [("mx_dim", dim), ("mx_plain", dim)],
-            insert_verb="INSERT INTO",
-            match_keys={"mx_dim": ["id"]},
-        )
-    assert _count(spark, derby_url, "mx_dim") == 30
-    assert _count(spark, derby_url, "mx_plain") == 60  # plain appends
 
 
 def test_table_exists_classifier_ignores_message_text():

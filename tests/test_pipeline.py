@@ -103,12 +103,13 @@ def test_streaming_file_source_to_star(spark, players, tmp_path):
         df.write.mode("append").parquet(f"{out}/{name}")
 
     sink = StarUpsertSink(writer=writer)
+    records = []
 
     # v1 name resolution derives dim rows from the batch itself, so it
     # runs INSIDE foreachBatch (like the reference's per-batch txn) —
     # on the raw stream it would be an unsupported stream-stream join.
     def process(batch, epoch_id):
-        sink(wire_to_staging(batch, players), epoch_id)
+        records.append(sink(wire_to_staging(batch, players), epoch_id))
 
     q = (
         stream.writeStream.foreachBatch(process)
@@ -129,7 +130,7 @@ def test_streaming_file_source_to_star(spark, players, tmp_path):
         .count()
         == 0
     )
-    assert sink.stats and all(s["status"] == "ok" for s in sink.stats)
+    assert records and all(r["status"] == "ok" for r in records)
 
 
 def test_sink_dlq_on_failure(spark, players):
@@ -145,10 +146,10 @@ def test_sink_dlq_on_failure(spark, players):
         captured["exc"] = str(exc)
 
     sink = StarUpsertSink(writer=writer, dlq=dlq)
-    sink(batch, epoch_id=1)
+    record = sink(batch, epoch_id=1)
     assert captured["rows"] > 0
     assert "sink down" in captured["exc"]
-    assert sink.stats[-1]["status"] == "dlq"
+    assert record == {"epoch": 1, "status": "dlq"}
 
 
 def test_sink_releases_each_epoch_batch(spark, players, tmp_path):
@@ -162,13 +163,13 @@ def test_sink_releases_each_epoch_batch(spark, players, tmp_path):
     )
 
     sink = StarUpsertSink(writer=epoch_partitioned_writer(str(tmp_path / "star")))
-    batches = []
+    batches, records = [], []
     for epoch in range(3):
         msgs = generate_reports(spark, n=200, seed=20 + epoch)
         batch = wire_to_staging(msgs, players)
-        sink(batch, epoch_id=epoch)
+        records.append(sink(batch, epoch_id=epoch))
         batches.append(batch)
-    assert [s["status"] for s in sink.stats] == ["ok"] * 3
+    assert [r["status"] for r in records] == ["ok"] * 3
     assert [b.storageLevel for b in batches] == [StorageLevel.NONE] * 3
 
 

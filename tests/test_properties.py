@@ -131,7 +131,7 @@ def test_star_upsert_invariants(spark, rows):
     ]:
         batch = batch.withColumn(slot, F.lit(None).cast("int"))
 
-    out = star.upsert_star(batch, key_mode="hash")
+    out = star.upsert_star(batch)
     sight, gear, loc, fact = (
         out["sighting"], out["gear"], out["location"], out["fact"]
     )

@@ -46,13 +46,14 @@ def test_soak_20_batches_with_restart_zero_dup_fact_pks(
     recorder = ProgressRecorder()
     writer = pl.epoch_partitioned_writer(out)
     sink = pl.StarUpsertSink(writer=writer)
+    records = []
 
     def process(batch, epoch_id):
         staged = pl.wire_to_staging(
             ksrc.valid_messages(ksrc.parse_wire(batch.select("value"))),
             players,
         )
-        sink(staged, epoch_id)
+        records.append(sink(staged, epoch_id))
 
     def run_until(total_epochs: int, budget_s: int = 240) -> None:
         q = (
@@ -66,9 +67,9 @@ def test_soak_20_batches_with_restart_zero_dup_fact_pks(
         )
         t0 = time.time()
         try:
-            while len(sink.stats) < total_epochs:
+            while len(records) < total_epochs:
                 assert time.time() - t0 < budget_s, (
-                    f"soak stalled at {len(sink.stats)} epochs"
+                    f"soak stalled at {len(records)} epochs"
                 )
                 time.sleep(0.5)
                 recorder.record(q)
@@ -78,8 +79,8 @@ def test_soak_20_batches_with_restart_zero_dup_fact_pks(
 
     # phase 1, then a cold restart from the checkpoint mid-run
     run_until(PHASE1_EPOCHS)
-    assert len(sink.stats) >= PHASE1_EPOCHS
-    run_until(TOTAL_EPOCHS + len(sink.stats))
+    assert len(records) >= PHASE1_EPOCHS
+    run_until(TOTAL_EPOCHS + len(records))
 
     fact = spark.read.parquet(f"{out}/fact")
     epochs = [r.epoch for r in fact.select("epoch").distinct().collect()]
@@ -110,7 +111,7 @@ def test_soak_20_batches_with_restart_zero_dup_fact_pks(
         (s["numInputRows"] or 0) > 0 for s in recorder.snapshots
     )
     # every epoch committed ok (none routed to DLQ)
-    assert all(s["status"] == "ok" for s in sink.stats)
+    assert all(r["status"] == "ok" for r in records)
 
 
 def _wire_stream(spark, max_rows: int, rows_per_batch: int):
@@ -155,20 +156,17 @@ def test_kill_and_resume_equals_one_shot(spark, players, tmp_path):
 
     def run(out: str, ckpt: str, stop_after_epochs: int | None) -> int:
         sink = pl.StarUpsertSink(writer=pl.epoch_partitioned_writer(out))
+        records = []
 
         def staged_sink(batch, epoch_id):
             # the v1 name resolve joins/unions against the players dim,
             # so staging runs INSIDE the micro-batch (the reference's
             # consume → transform → txn batch loop)
-            sink(
-                pl.wire_to_staging(
-                    ksrc.valid_messages(
-                        ksrc.parse_wire(batch.select("value"))
-                    ),
-                    players,
-                ),
-                epoch_id,
+            staged = pl.wire_to_staging(
+                ksrc.valid_messages(ksrc.parse_wire(batch.select("value"))),
+                players,
             )
+            records.append(sink(staged, epoch_id))
 
         q = pl.run_stream_to_star(
             _wire_stream(spark, max_rows, rpb),
@@ -180,7 +178,7 @@ def test_kill_and_resume_equals_one_shot(spark, players, tmp_path):
         try:
             while True:
                 assert time.time() - t0 < 300, "stream stalled"
-                n = len(sink.stats)
+                n = len(records)
                 if stop_after_epochs is not None and n >= stop_after_epochs:
                     break  # kill mid-stream: offset is nowhere near max_rows
                 progress = q.lastProgress
@@ -195,7 +193,7 @@ def test_kill_and_resume_equals_one_shot(spark, players, tmp_path):
         finally:
             q.stop()
             q.awaitTermination(60)
-        return len(sink.stats)
+        return len(records)
 
     # one-shot reference run
     one_shot_out = str(tmp_path / "oneshot_out")

@@ -49,7 +49,7 @@ def test_upsert_star_shapes(spark):
         "equip_cape_id", "equip_hands_id", "equip_shield_id",
     ]:
         batch = batch.withColumn(slot, F.lit(None).cast("int"))
-    out = star.upsert_star(batch, key_mode="hash")
+    out = star.upsert_star(batch)
     assert out["sighting"].count() == 2
     assert out["gear"].count() == 2
     assert out["location"].count() == 1
@@ -79,7 +79,7 @@ def test_hash_mode_plan_has_no_window_or_join(spark):
     stg = spark.createDataFrame(
         spark.sparkContext.emptyRDD(), STG_REPORT_SCHEMA
     )
-    out = star.upsert_star(stg, key_mode="hash")
+    out = star.upsert_star(stg)
     plan = out["fact"]._jdf.queryExecution().executedPlan().toString()
     for node in (
         "Window",
